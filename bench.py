@@ -143,7 +143,7 @@ HEADLINE_GATES = [
     "fetch_join", "dim_broadcast_join", "seen_anti_join",
     "robots_semi_join", "containment_theta_join",
     "politeness_topk_per_host", "groupby_agg_q1", "url_canonicalize",
-    "url_seen_cuckoo", "hosts_heavy_hitters", "events_range_join",
+    "hosts_heavy_hitters", "events_range_join",
     "events_hypertable_rollup", "first_match_per_key", "bbox_min_max",
     "collect_sorted_concat", "rollup_counts", "global_sort_topn",
     "union_streams", "intersect_keys", "membership_filter",

@@ -1,15 +1,14 @@
-"""Xor filter seen-set arm — the STATIC third sibling of the bloom
-(operators/dedup.py) and cuckoo (operators/cuckoo.py) URL-seen
-filters.
+"""Xor filter seen-set arm — the STATIC sibling of the bloom
+(operators/dedup.py) URL-seen filter.
 
 Xor filters (Graf & Lemire, "Xor Filters: Faster and Smaller Than
 Bloom and Cuckoo Filters", ACM JEA 25, 2020; the binary-fuse family's
-ancestor) are immutable once built but beat both siblings on space
+ancestor) are immutable once built but beat bloom filters on space
 (~9.84 bits/key at 8-bit fingerprints) and probe cost (exactly 3
 loads, no branching). That is precisely the shape of a crawl's
 FROZEN seen snapshots: the compacted historical seen-set that every
-round probes but never mutates (deltas live in the mutable cuckoo/
-bloom arm until the next compaction — the seen-delta compaction
+round probes but never mutates (deltas live in the mutable bloom
+arm until the next compaction — the seen-delta compaction
 already in plans/store.py). Reference parity: the reference keeps its
 seen set implicitly in scrapy's RFPDupeFilter fingerprint set
 (in-memory, mutable); the engine splits it into mutable-delta +
@@ -225,7 +224,7 @@ def split_new_urls_xor(
     exact_seen: DataFrame,
     n_shards: int = 8,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Same contract as dedup.split_new_urls / cuckoo's sibling:
+    """Same contract as dedup.split_new_urls:
     (new_rows, definite_new, fp_confirm_checked) — exact semantics,
     the filter only accelerates. Probe-negatives are definitely new
     (xor filters have no false negatives); probe-positives are

@@ -44,16 +44,15 @@ append; jars absent in this sandbox so only construction is gated).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from concurrent.futures import ThreadPoolExecutor
-
 from ..functions.urltools import host_col, with_url_identity
-from ..operators import cuckoo as _cuckoo
 from ..operators.dedup import BloomParams, build_blocks, split_new_urls, update_blocks
 from ..operators.extract import run_extract, split_pages, split_records_links
 from ..operators.fetch import fetch_join
@@ -84,18 +83,32 @@ SEEN_SCHEMA = T.StructType(
 )
 
 
+# Misra-Gries counters per partition behind ``hot_hosts_k``: the
+# sketch is EXACT (max_err 0) whenever a round touches fewer distinct
+# hosts than this, which keeps resume/metric parity at test scale
+# while the memory stays bounded at any frontier size.
+HOT_HOSTS_CAPACITY = 4096
+# shard count of the immutable xor-filter seen snapshot
+# (freeze_seen_snapshot): at 10^10 keys, shards scale the per-blob
+# size and the build parallelism; the per-shard blobs broadcast to the
+# probe. Still written into each manifest, so checkpoints record it.
+XOR_SNAPSHOT_SHARDS = 8
+# recrawl-policy priority boost: priority = base + RECRAWL_WEIGHT *
+# boost(host); hosts with no policy state yet get RECRAWL_UNSEEN_BOOST
+# (UCB's play-every-arm-once rule).
+RECRAWL_WEIGHT = 10.0
+RECRAWL_UNSEEN_BOOST = 4.0
+
+
 @dataclass
 class CrawlConfig:
     round_budget: float = 60.0  # seconds of per-host politeness budget
     max_rounds: int = 64
     max_retries: int = 8  # reference settings.py:119
+    # partitioned bloom filter fronting the exact seen table; None
+    # disables filtering (every candidate goes to the exact anti-join).
+    # The exact-semantics contract is identical either way.
     bloom: BloomParams | None = field(default_factory=BloomParams)
-    # which probabilistic seen-filter arm fronts the exact table:
-    # "bloom" (default; cfg.bloom == None disables filtering entirely)
-    # or "cuckoo" (deletable fingerprints — frontier retraction). The
-    # exact-semantics contract is identical either way.
-    seen_filter: str = "bloom"
-    cuckoo: _cuckoo.CuckooParams | None = None
     fetch_strategy: str = "auto"
     checkpoint_dir: str | None = None
     assign_fetch_seq: bool = True
@@ -116,46 +129,19 @@ class CrawlConfig:
     # (operators/sketches.heavy_hitters — VERDICT r3 ask #8): when
     # set, each round's metrics carry ``hot_hosts`` = the top-k
     # (host, lower-bound count) pairs over that round's fetched rows
-    # plus the sketch's global error bound. Bounded memory at any
-    # frontier size (capacity counters per partition, only
-    # O(partitions x capacity) summary rows shuffle) and EXACT —
-    # max_err 0 — whenever a round touches fewer distinct hosts than
-    # hot_hosts_capacity, which keeps resume/metric parity at test
-    # scale while staying safe at 10^10. None = off (default).
+    # plus the sketch's global error bound (HOT_HOSTS_CAPACITY
+    # counters per partition). None = off (default).
     hot_hosts_k: int | None = None
-    hot_hosts_capacity: int = 4096
-    # join strategy hint for the EXACT-CONFIRM joins against the seen
-    # table (fp-confirm anti-join in the seen split). "auto" lets AQE
-    # pick — right for small/fixture crawls where seen broadcasts
-    # cheaply. At steady scale the seen table is the biggest relation
-    # in the round (10^10 rows in production; 2M at the 4x bench) and
-    # AQE's broadcast choice builds a single-task hash relation — a
-    # measured 25 s SERIAL stage per round at the 4x web. The scale
-    # bench pins "shuffle_hash": both sides shuffle-partition on the
-    # key and build per-partition tables in parallel (round-4
-    # profiling, BASELINE.md).
-    seen_confirm_join: str = "auto"
-    # shard count for the IMMUTABLE xor-filter seen-snapshot tier
-    # (operators/xorfilter; Graf & Lemire 2020) built by
-    # CrawlEngine.freeze_seen_snapshot: the frozen historical seen
-    # mass at ~10 bits/key, probed per round ahead of the mutable
-    # bloom/cuckoo arm (which after a freeze covers only post-freeze
-    # deltas). At 10^10 keys, shards scale the per-blob size and the
-    # build parallelism; the per-shard blobs broadcast to the probe.
-    xor_snapshot_shards: int = 8
     # optional recrawl/scheduling policy arm (VERDICT r4 ask #7 —
     # operators/recrawl): None (static priority) | "ucb" | "ses" |
     # "cusum". When set, each round folds a per-host novelty-yield
     # indicator into a slim policy state (checkpointed through the
     # store like every round artifact — resume-safe) and the NEXT
     # round's link priorities become
-    #   priority = base(host_rank, depth) + recrawl_weight * boost
+    #   priority = base(host_rank, depth) + RECRAWL_WEIGHT * boost
     # where boost is the UCB1 score / SES level / CUSUM alarm count
-    # of the link's host. Hosts with no state yet get
-    # recrawl_unseen_boost (UCB's play-every-arm-once rule).
+    # of the link's host.
     recrawl_policy: str | None = None
-    recrawl_weight: float = 10.0
-    recrawl_unseen_boost: float = 4.0
     # incremental seen-set cardinality estimate via HyperLogLog
     # (operators/sketches — VERDICT r3 ask #8): when set (register
     # count log2), the loop carries <= 2^log2m register rows as state,
@@ -172,8 +158,8 @@ class CrawlResult:
     fetch_log: DataFrame
     seen: DataFrame
     metrics: list[dict]
-    # final seen-filter blocks (bloom/cuckoo arm; None when filtering
-    # is off) — what a continuation (retract + run_rounds) resumes from
+    # final bloom blocks (None when filtering is off) — what a
+    # continuation (retract + run_rounds) resumes from
     blocks: DataFrame | None = None
 
 
@@ -263,31 +249,6 @@ def _hll_key(seen_like: DataFrame) -> DataFrame:
     )
 
 
-def _seen_ops(cfg: CrawlConfig):
-    """(enabled, build, update, split, params, label_prefix) for the
-    configured seen-filter arm — bloom (OR-mergeable bitmaps) or
-    cuckoo (deletable fingerprints), both fronting the same exact
-    confirmation."""
-    if cfg.seen_filter == "cuckoo":
-        params = cfg.cuckoo or _cuckoo.CuckooParams()
-        return (
-            True,
-            _cuckoo.build_blocks,
-            _cuckoo.update_blocks,
-            _cuckoo.split_new_urls_cuckoo,
-            params,
-            "cuckoo",
-        )
-    return (
-        cfg.bloom is not None,
-        build_blocks,
-        update_blocks,
-        split_new_urls,
-        cfg.bloom or BloomParams(),
-        "bloom",
-    )
-
-
 class CrawlEngine:
     def __init__(
         self,
@@ -333,15 +294,17 @@ class CrawlEngine:
         if self.cfg.recrawl_policy is not None:
             from ..operators.recrawl import POLICIES
 
-            assert self.cfg.recrawl_policy in POLICIES, (
-                f"recrawl_policy must be one of {POLICIES}"
-            )
+            if self.cfg.recrawl_policy not in POLICIES:
+                raise ValueError(
+                    f"recrawl_policy must be one of {POLICIES}, "
+                    f"got {self.cfg.recrawl_policy!r}"
+                )
 
     def _prioritize(self, df: DataFrame) -> DataFrame:
         """priority column per the configured policy: host-rank-driven
         (O3: rank x W - depth) when ranks are supplied, flat default
         otherwise; plus the optional recrawl-policy boost
-        (base + recrawl_weight * boost(host)) once per-host state
+        (base + RECRAWL_WEIGHT * boost(host)) once per-host state
         exists. Requires host/depth columns."""
         if self.host_ranks is None:
             df = df.withColumn("priority", priority_col())
@@ -360,11 +323,8 @@ class CrawlEngine:
                 .withColumn(
                     "priority",
                     F.col("priority")
-                    + F.lit(self.cfg.recrawl_weight)
-                    * F.coalesce(
-                        F.col("boost"),
-                        F.lit(self.cfg.recrawl_unseen_boost),
-                    ),
+                    + F.lit(RECRAWL_WEIGHT)
+                    * F.coalesce(F.col("boost"), F.lit(RECRAWL_UNSEEN_BOOST)),
                 )
                 .drop("boost")
             )
@@ -440,9 +400,10 @@ class CrawlEngine:
             else self.seed_frontier(seed_rows)
         )
         seen = frontier.select("canonical_url", "url_hash")
-        f_on, f_build, _, _, f_params, _ = _seen_ops(self.cfg)
         blocks = (
-            f_build(seen.select("url_hash"), f_params) if f_on else None
+            build_blocks(seen.select("url_hash"), self.cfg.bloom)
+            if self.cfg.bloom is not None
+            else None
         )
         frontier = self._materialize(frontier, 0, "frontier")
         seen = self._materialize(seen, 0, "seen_delta")
@@ -473,17 +434,21 @@ class CrawlEngine:
     ) -> CrawlResult:
         """Resume from the greatest committed round in checkpoint_dir
         (T6 — per-round atomic commit, exact restart)."""
-        assert config.checkpoint_dir, "resume requires checkpoint_dir"
+        if not config.checkpoint_dir:
+            raise ValueError("resume requires checkpoint_dir")
         eng = cls(spark, pages, robots, config)
         committed = eng.store.committed_rounds()
-        assert committed, "nothing committed to resume from"
+        if not committed:
+            raise ValueError(
+                f"nothing committed to resume from in {config.checkpoint_dir}"
+            )
         info = eng.store.round_info(committed[-1])
         last_no = info["round"]
         frontier = eng.store.read(last_no, "frontier", FRONTIER_SCHEMA)
         seen = eng.store.read_many(committed, "seen_delta", SEEN_SCHEMA)
         blocks = (
             eng.store.read(last_no, "blocks", BLOOM_BLOCK_SCHEMA)
-            if _seen_ops(config)[0]
+            if config.bloom is not None
             else None
         )
         xr = info.get("xor_snapshot_round")
@@ -494,18 +459,15 @@ class CrawlEngine:
                 xr, "xor_snapshot", XOR_SNAPSHOT_SCHEMA
             ).localCheckpoint(eager=True)
             eng._xor_round = xr
-        if config.recrawl_policy is not None and last_no >= 1:
+        if config.recrawl_policy is not None and info.get("policy_state"):
+            # the manifest records whether the round wrote policy
+            # state; without the mark (policy enabled only at resume)
+            # the fold starts cold, same as a fresh crawl's first round
             from ..operators.recrawl import POLICY_STATE_SCHEMA
 
-            try:
-                eng.policy_state = eng.store.read(
-                    last_no, "policy_state", POLICY_STATE_SCHEMA
-                )
-            except Exception:
-                # policy enabled only AFTER the checkpointed rounds ran:
-                # no state table exists yet — start the fold cold, same
-                # as a fresh crawl's first round
-                eng.policy_state = None
+            eng.policy_state = eng.store.read(
+                last_no, "policy_state", POLICY_STATE_SCHEMA
+            )
         return eng._loop(
             frontier,
             seen,
@@ -522,7 +484,7 @@ class CrawlEngine:
     ) -> tuple[DataFrame | None, DataFrame]:
         """Freeze the full exact seen set into the IMMUTABLE xor-filter
         snapshot tier (operators/xorfilter — Graf & Lemire 2020) and
-        reset the mutable bloom/cuckoo arm to empty, so from here on
+        reset the mutable bloom blocks to empty, so from here on
         the mutable arm carries only POST-freeze deltas. This is the
         compaction product a long-running crawl periodically cuts: the
         10^10-key historical seen mass served at ~10 bits/key from
@@ -549,13 +511,13 @@ class CrawlEngine:
         from ..operators.xorfilter import build_shard_filters
         from ..schema import XOR_SNAPSHOT_SCHEMA  # noqa: F401  (schema home)
 
-        n_shards = self.cfg.xor_snapshot_shards
         filters = build_shard_filters(
-            seen.select("url_hash"), n_shards=n_shards
+            seen.select("url_hash"), n_shards=XOR_SNAPSHOT_SHARDS
         )
-        f_on, f_build, _, _, f_params, _ = _seen_ops(self.cfg)
         new_blocks = (
-            f_build(seen.select("url_hash").limit(0), f_params) if f_on else None
+            build_blocks(seen.select("url_hash").limit(0), self.cfg.bloom)
+            if self.cfg.bloom is not None
+            else None
         )
         if self.store.persistent:
             last = self.store.committed_rounds()[-1]
@@ -564,7 +526,7 @@ class CrawlEngine:
                 new_blocks = self._materialize(new_blocks, last, "blocks")
             info = self.store.round_info(last)
             info["xor_snapshot_round"] = last
-            info["xor_snapshot_shards"] = n_shards
+            info["xor_snapshot_shards"] = XOR_SNAPSHOT_SHARDS
             self._commit_round(last, info)
             self._xor_round = last
         else:
@@ -574,47 +536,37 @@ class CrawlEngine:
         self.xor_filters = filters
         return new_blocks, filters
 
-    # -- frontier retraction (cuckoo arm) -------------------------------
+    # -- frontier retraction ------------------------------------------
 
     def retract(
         self,
         seen: DataFrame,
         blocks: DataFrame | None,
         urls: "list[str] | DataFrame",
-        rebuild: bool = False,
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
         """Remove URLs from the seen set mid-crawl so a later round
-        re-fetches them — the operation the cuckoo arm exists for
-        (deletable fingerprints; a bloom filter cannot retract). The
-        production trigger is a policy change invalidating previously
-        fetched URLs: a robots rule flip, a recrawl decision from the
-        CDC diff, a takedown.
+        re-fetches them. The production trigger is a policy change
+        invalidating previously fetched URLs: a robots rule flip, a
+        recrawl decision from the CDC diff, a takedown.
 
         Path: canonicalize ``urls`` -> keep only rows actually in
-        ``seen`` (the cuckoo deletion precondition: never delete what
-        was not inserted) -> anti-join them out of the exact table and
-        :func:`~..operators.cuckoo.delete_from_blocks` their hashes
-        out of the filter blocks. With ``rebuild=True`` the blocks are
-        rebuilt from the updated exact table instead — one full pass,
-        immune to the documented fingerprint-collision caveat (a key
-        whose (bucket, fp) collides with a retracted key may read
-        definite-new afterward and be re-fetched once; benign for a
-        crawler, pinned in tests/test_cuckoo.py).
+        ``seen`` -> anti-join them out of the exact table -> rebuild
+        the bloom blocks from the updated exact table. A bloom bitmap
+        cannot delete, and retraction is a rare maintenance operation,
+        so one full rebuild pass replaces a deletable filter. After a
+        freeze the rebuild covers all of ``seen``, not only the
+        post-freeze deltas; that stays exact because the filter only
+        speeds up the check and the exact confirm decides.
 
         Persistent store: the committed seen deltas are REWRITTEN
         minus the retracted rows (compaction with a filter — the
-        union-of-deltas read model has no tombstones) and the updated
+        union-of-deltas read model has no tombstones) and the rebuilt
         blocks land under the latest committed round, so resume()
         observes the retraction exactly.
 
         Returns (seen', blocks', retracted) where ``retracted`` is the
         (canonical_url, url_hash) rows actually removed.
         """
-        if self.cfg.seen_filter != "cuckoo":
-            raise ValueError(
-                "frontier retraction requires seen_filter='cuckoo' — "
-                "bloom bitmaps cannot delete (P7/T5 design note)"
-            )
         if isinstance(urls, list):
             urls = self.spark.createDataFrame(
                 [(u,) for u in urls], "url string"
@@ -626,41 +578,27 @@ class CrawlEngine:
             .join(seen, ["canonical_url", "url_hash"], "left_semi")
             .localCheckpoint(eager=True)
         )
-        params = _seen_ops(self.cfg)[4]
-        new_seen = seen.join(
-            retracted.select("canonical_url"), "canonical_url", "left_anti"
-        )
-        if blocks is not None:
-            if rebuild:
-                new_blocks = _cuckoo.build_blocks(
-                    new_seen.select("url_hash"), params
-                )
-            else:
-                new_blocks = _cuckoo.delete_from_blocks(
-                    blocks, retracted.select("url_hash"), params
-                )
-        else:
-            new_blocks = None
-        if self.store.persistent:
-            from .store import IcebergStore, compact_deltas, compact_deltas_iceberg
 
-            _minus = lambda df: df.join(  # noqa: E731
+        def _minus(df: DataFrame) -> DataFrame:
+            return df.join(
                 retracted.select("canonical_url"), "canonical_url", "left_anti"
             )
-            if isinstance(self.store, IcebergStore):
-                compact_deltas_iceberg(self.store, "seen_delta", transform=_minus)
+
+        if self.store.persistent:
+            self.store.compact("seen_delta", SEEN_SCHEMA, transform=_minus)
+            committed = self.store.committed_rounds()
+            new_seen = self.store.read_many(committed, "seen_delta", SEEN_SCHEMA)
+        else:
+            new_seen = _minus(seen)
+        new_blocks = None
+        if blocks is not None:
+            # the rebuild reads the REWRITTEN deltas (persistent) or the
+            # anti-join (memory), never the pre-compaction files
+            new_blocks = build_blocks(new_seen.select("url_hash"), self.cfg.bloom)
+            if self.store.persistent:
+                new_blocks = self._materialize(new_blocks, committed[-1], "blocks")
             else:
-                compact_deltas(
-                    self.store, SEEN_SCHEMA, "seen_delta", transform=_minus
-                )
-            new_seen = self.store.read_many(
-                self.store.committed_rounds(), "seen_delta", SEEN_SCHEMA
-            )
-            if new_blocks is not None:
-                last = self.store.committed_rounds()[-1]
-                new_blocks = self._materialize(new_blocks, last, "blocks")
-        elif new_blocks is not None:
-            new_blocks = new_blocks.localCheckpoint(eager=True)
+                new_blocks = new_blocks.localCheckpoint(eager=True)
         return new_seen, new_blocks, retracted
 
     def retract_for_robots(
@@ -668,8 +606,7 @@ class CrawlEngine:
         seen: DataFrame,
         blocks: DataFrame | None,
         robots: DataFrame | None = None,
-        rebuild: bool = False,
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
         """The production retraction trigger (the VERDICT r3 scenario):
         a robots.txt rule CHANGE mid-crawl invalidates previously
         fetched URLs. Computes the seen rows that are DISALLOWED under
@@ -677,7 +614,7 @@ class CrawlEngine:
         pinned one) using robots_split's exact prefix semantics —
         broadcast dim against the seen table, never a seen shuffle —
         and retracts them through :meth:`retract`. The affected URLs
-        leave the seen set (and the cuckoo filter), and the round
+        leave the seen set (and the bloom blocks), and the round
         loop's robots gate keeps them unfetched for as long as the
         rule stands; if the rule is later relaxed they are simply
         rediscoverable, with no stale seen entry in the way.
@@ -691,7 +628,6 @@ class CrawlEngine:
             seen,
             blocks,
             disallowed.select(F.col("canonical_url").alias("url")),
-            rebuild=rebuild,
         )
 
     # -- the round loop -------------------------------------------------
@@ -828,12 +764,6 @@ class CrawlEngine:
                 .drop("_rn")
                 .select(*FRONTIER_COLS)
             )
-            _, _, f_update, f_split, f_params, f_pfx = _seen_ops(cfg)
-            exact_seen = (
-                seen
-                if cfg.seen_confirm_join == "auto"
-                else seen.hint(cfg.seen_confirm_join)
-            )
             obs_xor = None
             if self.xor_filters is not None:
                 # tier-1: the frozen xor snapshot. A candidate is
@@ -847,15 +777,11 @@ class CrawlEngine:
                 from ..operators.xorfilter import xor_maybe_hashes
 
                 maybe = xor_maybe_hashes(
-                    links_dedup, self.xor_filters, cfg.xor_snapshot_shards
+                    links_dedup, self.xor_filters, XOR_SNAPSHOT_SHARDS
                 )
                 snap_seen = (
                     links_dedup.join(maybe, "url_hash", "left_semi")
-                    .join(
-                        exact_seen.select("canonical_url"),
-                        "canonical_url",
-                        "left_semi",
-                    )
+                    .join(seen.select("canonical_url"), "canonical_url", "left_semi")
                     .select("canonical_url")
                     .withColumn("_snap", F.lit(1))
                 )
@@ -875,7 +801,7 @@ class CrawlEngine:
                 ).drop("_snap")
             else:
                 links_for_split = links_dedup
-            new_rows, _, _ = f_split(links_for_split, blocks, exact_seen, f_params)
+            new_rows, _, _ = split_new_urls(links_for_split, blocks, seen, cfg.bloom)
             # materialize ONCE; this is the round's heavy job — it
             # computes the whole selected->fetch->extract->dedup chain
             # (upstream persists fill here); everything below reads
@@ -887,7 +813,7 @@ class CrawlEngine:
                 obs_via,
                 *[
                     F.count(F.when(F.col("via") == v, 1)).alias(v)
-                    for v in ("exact", f"{f_pfx}_definite", f"{f_pfx}_fp")
+                    for v in ("exact", "bloom_definite", "bloom_fp")
                 ],
             )
             new_rows = self._materialize(new_rows, round_no, "new_rows")
@@ -939,8 +865,8 @@ class CrawlEngine:
             # are overlapped instead of summed.
             futs = {}
             if blocks is not None:
-                new_blocks = f_update(
-                    blocks, seen_delta.select("url_hash"), f_params
+                new_blocks = update_blocks(
+                    blocks, seen_delta.select("url_hash"), cfg.bloom
                 )
                 old_blocks = blocks
                 futs["blocks"] = pool.submit(
@@ -1015,7 +941,7 @@ class CrawlEngine:
                     round_log.filter(F.col("status") == "fetched"),
                     "host",
                     cfg.hot_hosts_k,
-                    capacity=cfg.hot_hosts_capacity,
+                    capacity=HOT_HOSTS_CAPACITY,
                 ).collect()
                 hot_hosts = [[r["host"], r["n"]] for r in hh]
                 hot_hosts_err = hh[0]["max_err"] if hh else 0
@@ -1030,9 +956,8 @@ class CrawlEngine:
                 "new_urls": sum(via_counts.values()),
                 # zero -> None preserves the round-2 metric shape
                 # (key absent when no rows carried that via)
-                f"{f_pfx}_definite_new": via_counts[f"{f_pfx}_definite"]
-                or None,
-                f"{f_pfx}_fp": via_counts[f"{f_pfx}_fp"] or None,
+                "bloom_definite_new": via_counts["bloom_definite"] or None,
+                "bloom_fp": via_counts["bloom_fp"] or None,
             }
             if hot_hosts is not None:
                 m["hot_hosts"] = hot_hosts
@@ -1043,14 +968,19 @@ class CrawlEngine:
                 # empty link set). Unlike obs_via — observed at the
                 # job's materialized ROOT — this node sits mid-plan,
                 # and AQE's empty-relation propagation folds it away
-                # entirely when the round produced no candidate links;
-                # the metric row then comes back unconvertible. In
-                # every such fold the true count is 0 (only an empty
-                # input is folded), so that is what we record.
+                # entirely when the round produced no candidate links:
+                # the JVM then hands back an empty metrics row and
+                # toPyRow fails its schema assertion. Only an empty
+                # input is folded, so the true count is 0.
                 try:
-                    m["xor_snapshot_dropped"] = int(obs_xor.get["dropped"] or 0)
-                except Exception:
-                    m["xor_snapshot_dropped"] = 0
+                    dropped = obs_xor.get["dropped"]
+                except Py4JJavaError as e:
+                    if e.java_exception.getClass().getName() != (
+                        "java.lang.AssertionError"
+                    ):
+                        raise
+                    dropped = 0
+                m["xor_snapshot_dropped"] = int(dropped or 0)
             if hll_regs is not None:
                 from ..operators.sketches import hll_estimate, hll_registers
 
@@ -1099,11 +1029,15 @@ class CrawlEngine:
                 "fetch_seq_offset": fetch_seq_offset,
                 "metrics": metrics,
             }
+            if cfg.recrawl_policy is not None:
+                # resume reads policy_state only where a manifest says
+                # the round wrote it
+                round_info["policy_state"] = True
             if self._xor_round is not None:
                 # carry the snapshot pointer forward so resume() from
                 # ANY later round reattaches the tier
                 round_info["xor_snapshot_round"] = self._xor_round
-                round_info["xor_snapshot_shards"] = cfg.xor_snapshot_shards
+                round_info["xor_snapshot_shards"] = XOR_SNAPSHOT_SHARDS
             self._commit_round(round_no, round_info)
             selected.unpersist()
             extracted.unpersist()

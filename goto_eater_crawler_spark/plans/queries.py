@@ -383,7 +383,6 @@ _GATE_ORDER: list[str] = [
     "politeness_topk_per_host",
     "groupby_agg_q1",
     "url_canonicalize",
-    "url_seen_cuckoo",
     "hosts_heavy_hitters",
     "events_range_join",
     "events_hypertable_rollup",
@@ -2033,56 +2032,11 @@ def q_dedup_embedding_lsh(spark, sf_dir):
 
 
 @_register(
-    "url_seen_cuckoo",
-    # P7 through the cuckoo arm: the filter only accelerates, the
-    # exact table decides, so the observable result is exactly the
-    # anti-join the oracle states — while the engine actually routes
-    # candidates through partitioned cuckoo blocks (cogroup probe +
-    # exact confirm of the maybes).
-    """
-    SELECT o.o_orderstatus AS status, count(*) AS n
-    FROM orders o
-    ANTI JOIN (SELECT c_custkey FROM customer WHERE c_acctbal < 0) s
-      ON o.o_custkey = s.c_custkey
-    GROUP BY status ORDER BY status
-    """,
-)
-def q_url_seen_cuckoo(spark, sf_dir):
-    from ..operators import cuckoo as _ck
-
-    params = _ck.CuckooParams(n_blocks=8, n_buckets=1 << 12)
-    seen = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") < 0)
-        .select(
-            F.concat(F.lit("https://h"), F.col("c_custkey").cast("string")).alias(
-                "canonical_url"
-            ),
-            F.xxhash64(F.col("c_custkey").cast("string")).alias("url_hash"),
-        )
-    ).persist()
-    blocks = _ck.build_blocks(seen.select("url_hash"), params)
-    cand = _t(spark, sf_dir, "orders").select(
-        "o_orderstatus",
-        F.concat(F.lit("https://h"), F.col("o_custkey").cast("string")).alias(
-            "canonical_url"
-        ),
-        F.xxhash64(F.col("o_custkey").cast("string")).alias("url_hash"),
-    )
-    new_rows, _, _ = _ck.split_new_urls_cuckoo(cand, blocks, seen, params)
-    return (
-        new_rows.groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("status")
-    )
-
-
-@_register(
     "url_seen_xor",
     # P7 through the xor-filter arm (Graf & Lemire 2020): the
-    # IMMUTABLE seen-snapshot tier next to the mutable bloom/cuckoo
-    # arms — zero false negatives by the xor identity, so probe-
-    # negatives skip the exact table entirely and only probe-positive
+    # IMMUTABLE seen-snapshot tier next to the mutable bloom arm —
+    # zero false negatives by the xor identity, so probe-negatives
+    # skip the exact table entirely and only probe-positive
     # maybes (~2^-8 of the non-seen mass) are confirmed. Observable
     # result is therefore exactly the anti-join the oracle states,
     # while the engine routes candidates through per-shard broadcast

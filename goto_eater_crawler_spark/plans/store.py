@@ -10,8 +10,9 @@ three implementations cover the deployment spectrum:
   durable state; the round loop's lineage cut only).
 - :class:`ParquetManifestStore` — parquet dirs under
   ``rounds/round=NNNN/<name>`` with a ``manifest.json`` written LAST
-  as the atomic commit mark (a crashed round leaves no manifest and
-  is invisible to resume). This is the sandbox stand-in whose commit
+  as the atomic commit mark (written to a temp file, fsynced and
+  renamed into place: a crashed round leaves no manifest and is
+  invisible to resume). This is the sandbox stand-in whose commit
   discipline mirrors Iceberg's snapshot-commit-last protocol.
 - :class:`IcebergStore` — one partitioned table per state name
   (``<prefix>_<name>``, partitioned by ``round``) written via
@@ -30,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +68,13 @@ class TableStore(Protocol):
     def round_info(self, round_no: int) -> dict:
         ...
 
+    def compact(self, name: str, schema: T.StructType, transform=None) -> int:
+        """Table maintenance: fold every committed round's ``name``
+        delta into the latest committed round, optionally through
+        ``transform`` (DataFrame -> DataFrame); returns the number of
+        rounds folded."""
+        ...
+
 
 class MemoryStore:
     persistent = False
@@ -89,6 +98,9 @@ class MemoryStore:
         return []
 
     def round_info(self, round_no: int) -> dict:  # pragma: no cover
+        raise NotImplementedError("MemoryStore holds no durable state")
+
+    def compact(self, name, schema, transform=None):  # pragma: no cover
         raise NotImplementedError("MemoryStore holds no durable state")
 
 
@@ -119,10 +131,21 @@ class ParquetManifestStore:
         return self.spark.read.schema(schema).parquet(*paths)
 
     def commit_round(self, round_no: int, info: dict) -> None:
+        # temp file + fsync + rename: committed_rounds() treats "file
+        # exists" as committed, so manifest.json must never be visible
+        # half-written (os.replace is atomic within one directory)
         base = self._dir(round_no)
         os.makedirs(base, exist_ok=True)
-        with open(os.path.join(base, "manifest.json"), "w") as f:
-            json.dump(info, f)
+        tmp = os.path.join(base, "_manifest.json.tmp")
+        try:
+            with open(tmp, "w") as f:
+                json.dump(info, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, os.path.join(base, "manifest.json"))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def committed_rounds(self) -> list[int]:
         rounds_dir = os.path.join(self.base, "rounds")
@@ -137,6 +160,56 @@ class ParquetManifestStore:
     def round_info(self, round_no: int) -> dict:
         with open(os.path.join(self._dir(round_no), "manifest.json")) as f:
             return json.load(f)
+
+    def compact(self, name, schema, transform=None) -> int:
+        """Table maintenance: rewrite all committed per-round ``name``
+        deltas into ONE delta under the latest committed round — the
+        parquet-store analogue of Iceberg's ``rewrite_data_files``.
+        After 10^4 rounds a 10^10-row seen set is 10^4 small deltas;
+        resume's multi-path scan pays per-file open cost and the
+        cluster pays listing latency, so periodic compaction keeps the
+        file count O(1) while ``read_many`` output stays row-identical.
+
+        Crash-safety: the compacted file lands in a staging dir first
+        and replaces the latest round's delta by rename; older rounds'
+        deltas are deleted only after the swap. A crash between swap
+        and deletes leaves duplicate rows visible — harmless for a
+        SEEN SET (set semantics downstream) and healed by re-running
+        compaction. A crash before the swap leaves state untouched.
+
+        ``transform`` (optional, DataFrame -> DataFrame) is applied to
+        the union before the rewrite — the hook CrawlEngine.retract
+        uses to drop retracted rows from EVERY committed delta in one
+        pass (a filter over the union-of-deltas model needs a rewrite;
+        per-delta tombstones would leak into read_many).
+
+        Returns the number of rounds whose deltas were folded in.
+        """
+        rounds = self.committed_rounds()
+        if not rounds or (len(rounds) < 2 and transform is None):
+            return 0
+        last = rounds[-1]
+        union = self.read_many(rounds, name, schema)
+        if transform is not None:
+            # staging write reads the original paths, so no self-read:
+            # the swap happens only after the transformed rewrite lands
+            union = transform(union)
+        staging = self._dir(last, f"_{name}_compacting")
+        union.write.mode("overwrite").parquet(staging)
+        final = self._dir(last, name)
+        backup = self._dir(last, f"_{name}_old")
+        if os.path.exists(final):
+            os.rename(final, backup)
+        os.rename(staging, final)
+        folded = 0
+        for r in rounds[:-1]:
+            d = self._dir(r, name)
+            if os.path.exists(d):
+                shutil.rmtree(d)
+                folded += 1
+        if os.path.exists(backup):
+            shutil.rmtree(backup)
+        return folded + 1
 
 
 class IcebergStore:
@@ -270,6 +343,37 @@ class IcebergStore:
         )
         return json.loads(rows[0]["info"])
 
+    def compact(self, name, schema, transform=None) -> int:
+        """Catalog-table twin of :meth:`ParquetManifestStore.compact`:
+        rewrite every committed round's ``name`` partition into the
+        latest round's partition in ONE table overwrite. On real
+        Iceberg (v2) the overwrite is a single atomic snapshot commit —
+        the crash-safety comes from the table format, not from rename
+        choreography. In v1 session-catalog test mode the same logic
+        runs as a materialize-then-overwrite (non-atomic; test-mode
+        limitation, documented — production compaction belongs on the
+        v2 path or Iceberg's own rewrite_data_files procedure).
+
+        Returns the number of rounds folded. No concurrent writers
+        (maintenance-window op, same precondition as the parquet twin).
+        """
+        rounds = self.committed_rounds()
+        if not rounds or (len(rounds) < 2 and transform is None):
+            return 0
+        last = rounds[-1]
+        t = self._table(name)
+        folded = self.spark.read.table(t).drop("round")
+        if transform is not None:  # retraction hook — see the parquet twin
+            folded = transform(folded)
+        folded = folded.withColumn("round", F.lit(last))
+        if self.v2:
+            folded.writeTo(t).overwrite(F.lit(True))
+        else:
+            # break the self-read before overwriting the source table
+            folded = folded.localCheckpoint(eager=True)
+            folded.write.mode("overwrite").partitionBy("round").saveAsTable(t)
+        return len(rounds)
+
 
 def make_store(spark: SparkSession, checkpoint_dir: str | None) -> TableStore:
     """checkpoint_dir semantics: None -> MemoryStore;
@@ -279,100 +383,3 @@ def make_store(spark: SparkSession, checkpoint_dir: str | None) -> TableStore:
     if checkpoint_dir.startswith("iceberg:"):
         return IcebergStore(spark, checkpoint_dir[len("iceberg:"):])
     return ParquetManifestStore(spark, checkpoint_dir)
-
-
-def compact_deltas(
-    store: "ParquetManifestStore",
-    schema: T.StructType,
-    name: str = "seen_delta",
-    target_files: int | None = None,
-    transform=None,
-) -> int:
-    """Table-maintenance: rewrite all committed per-round ``name``
-    deltas into ONE delta under the latest committed round — the
-    parquet-store analogue of Iceberg's ``rewrite_data_files``. After
-    10^4 rounds a 10^10-row seen set is 10^4 small deltas; resume's
-    multi-path scan pays per-file open cost and the cluster pays
-    listing latency, so periodic compaction keeps the file count O(1)
-    while ``read_many`` output stays row-identical.
-
-    Crash-safety: the compacted file lands in a staging dir first and
-    replaces the latest round's delta by rename; older rounds' deltas
-    are deleted only after the swap. A crash between swap and deletes
-    leaves duplicate rows visible — harmless for a SEEN SET (set
-    semantics downstream) and healed by re-running compaction. A crash
-    before the swap leaves state untouched.
-
-    ``transform`` (optional, DataFrame -> DataFrame) is applied to the
-    union before the rewrite — the hook CrawlEngine.retract uses to
-    drop retracted rows from EVERY committed delta in one pass (a
-    filter over the union-of-deltas model needs a rewrite; per-delta
-    tombstones would leak into read_many).
-
-    Returns the number of rounds whose deltas were folded in.
-    """
-    import shutil
-
-    rounds = store.committed_rounds()
-    if not rounds or (len(rounds) < 2 and transform is None):
-        return 0
-    last = rounds[-1]
-    union = store.read_many(rounds, name, schema)
-    if transform is not None:
-        # staging write reads the original paths, so no self-read:
-        # the swap happens only after the transformed rewrite lands
-        union = transform(union)
-    if target_files is not None:
-        # bounded file count; at 10^10 rows leave None (natural
-        # partitioning) or size target_files to the data, never 1
-        union = union.repartition(target_files)
-    staging = store._dir(last, f"_{name}_compacting")
-    union.write.mode("overwrite").parquet(staging)
-    final = store._dir(last, name)
-    backup = store._dir(last, f"_{name}_old")
-    if os.path.exists(final):
-        os.rename(final, backup)
-    os.rename(staging, final)
-    folded = 0
-    for r in rounds[:-1]:
-        d = store._dir(r, name)
-        if os.path.exists(d):
-            shutil.rmtree(d)
-            folded += 1
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    return folded + 1
-
-
-def compact_deltas_iceberg(
-    store: "IcebergStore", name: str = "seen_delta", transform=None
-) -> int:
-    """Catalog-table twin of :func:`compact_deltas`: rewrite every
-    committed round's ``name`` partition into the latest round's
-    partition in ONE table overwrite. On real Iceberg (v2) the
-    overwrite is a single atomic snapshot commit — the crash-safety
-    comes from the table format, not from rename choreography. In v1
-    session-catalog test mode the same logic runs as a
-    materialize-then-overwrite (non-atomic; test-mode limitation,
-    documented — production compaction belongs on the v2 path or
-    Iceberg's own rewrite_data_files procedure).
-
-    Returns the number of rounds folded. No concurrent writers
-    (maintenance-window op, same precondition as the parquet twin).
-    """
-    rounds = store.committed_rounds()
-    if not rounds or (len(rounds) < 2 and transform is None):
-        return 0
-    last = rounds[-1]
-    t = store._table(name)
-    folded = store.spark.read.table(t).drop("round")
-    if transform is not None:  # retraction hook — see the parquet twin
-        folded = transform(folded)
-    folded = folded.withColumn("round", F.lit(last))
-    if store.v2:
-        folded.writeTo(t).overwrite(F.lit(True))
-    else:
-        # break the self-read before overwriting the source table
-        folded = folded.localCheckpoint(eager=True)
-        folded.write.mode("overwrite").partitionBy("round").saveAsTable(t)
-    return len(rounds)

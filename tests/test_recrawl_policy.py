@@ -199,3 +199,62 @@ def test_policy_resume_equals_uninterrupted(spark, web, tmp_path_factory):
         f"{cut_dir}/rounds/round={len(full.metrics):04d}/policy_state"
     )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+def test_policy_enabled_at_resume_starts_cold(
+    spark, web, tmp_path, monkeypatch
+):
+    """Rounds checkpointed without a policy record no policy_state in
+    their manifests, so a resume that turns the policy on starts the
+    fold cold (reads no policy_state) and records it from then on."""
+    import json
+
+    from goto_eater_crawler_spark.plans.store import ParquetManifestStore
+
+    pages, seeds, robots = web
+    pages_df = webgen.pages_df(spark, pages)
+    robots_df = webgen.robots_df(spark, robots)
+    ckpt = str(tmp_path / "ckpt")
+    CrawlEngine(spark, pages_df, robots_df, _cfg(ckpt=ckpt, max_rounds=2)).run(
+        seeds
+    )
+
+    reads = []
+    real_read = ParquetManifestStore.read
+
+    def spy(self, round_no, name, schema):
+        reads.append(name)
+        return real_read(self, round_no, name, schema)
+
+    monkeypatch.setattr(ParquetManifestStore, "read", spy)
+    resumed = CrawlEngine.resume(
+        spark, pages_df, robots_df, _cfg("ucb", ckpt=ckpt, max_rounds=3)
+    )
+    assert "policy_state" not in reads
+    assert [m["round"] for m in resumed.metrics] == [1, 2, 3]
+    with open(f"{ckpt}/rounds/round=0003/manifest.json") as f:
+        assert json.load(f)["policy_state"] is True
+
+
+def test_resume_raises_when_recorded_policy_state_is_missing(
+    spark, web, tmp_path
+):
+    """A manifest that records policy_state promises the table: if it
+    is gone, resume must fail loudly instead of restarting the policy
+    cold."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    pages, seeds, robots = web
+    pages_df = webgen.pages_df(spark, pages)
+    robots_df = webgen.robots_df(spark, robots)
+    ckpt = str(tmp_path / "ckpt")
+    CrawlEngine(
+        spark, pages_df, robots_df, _cfg("ucb", ckpt=ckpt, max_rounds=2)
+    ).run(seeds)
+    shutil.rmtree(f"{ckpt}/rounds/round=0002/policy_state")
+    with pytest.raises(AnalysisException):
+        CrawlEngine.resume(
+            spark, pages_df, robots_df, _cfg("ucb", ckpt=ckpt, max_rounds=2)
+        )

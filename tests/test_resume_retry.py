@@ -249,10 +249,7 @@ def test_resume_after_seen_compaction(spark, small_web, tmp_path_factory):
     seen_delta dir."""
     import os
 
-    from goto_eater_crawler_spark.plans.store import (
-        ParquetManifestStore,
-        compact_deltas,
-    )
+    from goto_eater_crawler_spark.plans.store import ParquetManifestStore
     from goto_eater_crawler_spark.plans.crawl import SEEN_SCHEMA
 
     pages, seeds, robots = small_web
@@ -271,7 +268,7 @@ def test_resume_after_seen_compaction(spark, small_web, tmp_path_factory):
     before = {
         tuple(r) for r in store.read_many(rounds, "seen_delta", SEEN_SCHEMA).collect()
     }
-    folded = compact_deltas(store, SEEN_SCHEMA, "seen_delta", target_files=2)
+    folded = store.compact("seen_delta", SEEN_SCHEMA)
     assert folded == len(rounds)
     after = {
         tuple(r) for r in store.read_many(rounds, "seen_delta", SEEN_SCHEMA).collect()
@@ -306,10 +303,7 @@ def test_resume_after_seen_compaction_iceberg_mode(spark, small_web, tmp_path_fa
     import uuid
 
     from goto_eater_crawler_spark.plans.crawl import SEEN_SCHEMA
-    from goto_eater_crawler_spark.plans.store import (
-        IcebergStore,
-        compact_deltas_iceberg,
-    )
+    from goto_eater_crawler_spark.plans.store import IcebergStore
 
     pages, seeds, robots = small_web
     pages_df = webgen.pages_df(spark, pages)
@@ -331,7 +325,7 @@ def test_resume_after_seen_compaction_iceberg_mode(spark, small_web, tmp_path_fa
         tuple(r)
         for r in store.read_many(rounds, "seen_delta", SEEN_SCHEMA).collect()
     }
-    assert compact_deltas_iceberg(store, "seen_delta") == len(rounds)
+    assert store.compact("seen_delta", SEEN_SCHEMA) == len(rounds)
     after = {
         tuple(r)
         for r in store.read_many(rounds, "seen_delta", SEEN_SCHEMA).collect()
@@ -347,3 +341,54 @@ def test_resume_after_seen_compaction_iceberg_mode(spark, small_web, tmp_path_fa
 
     resumed = CrawlEngine.resume(spark, pages_df, robots_df, _cfg(cut_prefix))
     assert {r["canonical_url"] for r in resumed.seen.collect()} == full_state[1]
+
+
+def test_torn_manifest_write_is_not_committed(
+    spark, small_web, tmp_path, monkeypatch
+):
+    """A crash while round 2's manifest is being written (json.dump
+    raises after writing a prefix) must leave round 2 uncommitted:
+    committed_rounds() stops at round 1 and resume re-runs round 2
+    from round 1's state, reproducing the metrics the crashed attempt
+    was committing."""
+    import json
+    import os
+    import types
+
+    from goto_eater_crawler_spark.plans import store as store_mod
+
+    pages, seeds, robots = small_web
+    pages_df = webgen.pages_df(spark, pages)
+    robots_df = webgen.robots_df(spark, robots)
+    ckpt = str(tmp_path / "ckpt")
+    torn_info = {}
+
+    def torn_dump(obj, f, **kw):
+        if obj["round"] == 2:
+            torn_info.update(json.loads(json.dumps(obj)))
+            f.write(json.dumps(obj)[:20])
+            raise OSError("disk full")
+        json.dump(obj, f, **kw)
+
+    monkeypatch.setattr(
+        store_mod,
+        "json",
+        types.SimpleNamespace(
+            dump=torn_dump, load=json.load, dumps=json.dumps, loads=json.loads
+        ),
+    )
+    eng = CrawlEngine(spark, pages_df, robots_df, _cfg(ckpt))
+    with pytest.raises(OSError, match="disk full"):
+        eng.run(seeds)
+    monkeypatch.undo()
+
+    assert eng.store.committed_rounds() == [0, 1]
+    round2 = os.path.join(ckpt, "rounds", "round=0002")
+    assert not [f for f in os.listdir(round2) if "manifest" in f]
+
+    resumed = CrawlEngine.resume(
+        spark, pages_df, robots_df, _cfg(ckpt, max_rounds=2)
+    )
+    assert [m["round"] for m in resumed.metrics] == [1, 2]
+    assert resumed.metrics == torn_info["metrics"]
+    assert eng.store.committed_rounds() == [0, 1, 2]

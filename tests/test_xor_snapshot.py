@@ -157,7 +157,7 @@ def test_retract_after_freeze_refetches_without_rebuild(spark):
         spark,
         webgen.pages_df(spark, pages),
         webgen.robots_df(spark, robots),
-        CrawlConfig(round_budget=1e6, max_rounds=8, seen_filter="cuckoo"),
+        CrawlConfig(round_budget=1e6, max_rounds=8),
     )
     res1 = eng.run(seeds)
     blocks2, _ = eng.freeze_seen_snapshot(res1.seen, res1.blocks)
@@ -188,3 +188,9 @@ def test_retract_after_freeze_refetches_without_rebuild(spark):
     assert fetched2 == {l_url, d_url}
     # D came back through the seen split as a NEW url
     assert sum(m["new_urls"] for m in res2.metrics) == 1
+    # the last round fetched only D, a detail page with no links: AQE
+    # folds the observed snapshot probe of that empty candidate set,
+    # and the round must still record 0 drops
+    assert res2.metrics[-1]["fetched"] == 1
+    assert res2.metrics[-1]["new_urls"] == 0
+    assert res2.metrics[-1]["xor_snapshot_dropped"] == 0

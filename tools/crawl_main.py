@@ -31,7 +31,7 @@ from goto_eater_crawler_spark.sources import webgen  # noqa: E402
 from goto_eater_crawler_spark.sources.sinks import write_source_csvs  # noqa: E402
 
 
-def parse_args(argv=None):
+def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="frontier crawl driver")
     p.add_argument("--pages", help="pages table path (parquet)")
     p.add_argument("--robots", help="robots table path (parquet)")
@@ -53,8 +53,6 @@ def parse_args(argv=None):
                    help="per-round politeness budget in seconds")
     p.add_argument("--rounds", type=int, default=64, help="max rounds")
     p.add_argument("--master", default=None, help="spark master override")
-    p.add_argument("--seen-filter", default="bloom", choices=("bloom", "cuckoo"),
-                   help="probabilistic seen-set arm fronting the exact table")
     p.add_argument("--hot-hosts-k", type=int, default=None,
                    help="per-round top-k hot hosts in the metrics via the "
                         "Misra-Gries sketch (bounded memory at any scale)")
@@ -71,24 +69,34 @@ def parse_args(argv=None):
                         "with the crawl and survives --resume")
     p.add_argument("--retract", default="",
                    help="comma-separated URLs to retract from the seen set "
-                        "of an existing checkpoint (requires --checkpoint "
-                        "and --seen-filter cuckoo; runs BEFORE --resume so "
-                        "the resumed crawl can re-fetch them)")
-    return p.parse_args(argv)
+                        "of an existing checkpoint (requires --checkpoint; "
+                        "runs BEFORE --resume so the resumed crawl can "
+                        "re-fetch them)")
+    return p
 
 
 def main(argv=None) -> int:
-    args = parse_args(argv)
-    spark = get_spark("crawl-main", master=args.master)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if args.retract and not args.checkpoint:
+        parser.error("--retract requires --checkpoint")
+    if not (args.registry or args.fixture) and not (
+        args.pages and args.robots and args.seeds
+    ):
+        parser.error("--pages/--robots/--seeds required without --fixture")
 
+    # pure-python inputs first, so argument errors surface before the
+    # JVM starts
     cfg_domains = None
+    pages_rows = robots_rows = None
     if args.registry:
         from goto_eater_crawler_spark.sources import registry, registry_fixture
 
         if args.sources:
             names = args.sources.split(",")
             unknown = set(names) - set(registry.REGISTRY)
-            assert not unknown, f"unknown sources: {sorted(unknown)}"
+            if unknown:
+                parser.error(f"unknown sources: {sorted(unknown)}")
         else:
             # reference main.py:25-77 semantics: all minus ignores,
             # restricted to the single-pass fixture corpus
@@ -98,52 +106,49 @@ def main(argv=None) -> int:
                 if n in set(registry_fixture.corpus_sources())
             ]
         pages_rows, seeds, robots_rows = registry_fixture.crawl_fixture(names)
-        pages = webgen.pages_df(spark, pages_rows)
-        robots = webgen.robots_df(spark, robots_rows)
         cfg_domains = registry.allowed_domains_map()
         args.sources = ""  # selection already applied
     elif args.fixture:
         pages_rows, seeds, robots_rows = webgen.build_fixture_web()
-        pages = webgen.pages_df(spark, pages_rows)
-        robots = webgen.robots_df(spark, robots_rows)
     else:
-        assert args.pages and args.robots and args.seeds, (
-            "--pages/--robots/--seeds required without --fixture"
-        )
-        pages = spark.read.schema(PAGES_SCHEMA).parquet(args.pages)
-        robots = spark.read.schema(ROBOTS_SCHEMA).parquet(args.robots)
         with open(args.seeds) as f:
             seeds = json.load(f)
 
     if args.sources:
         wanted = set(args.sources.split(","))
         seeds = [s for s in seeds if s["source"] in wanted]
-        assert seeds, f"no seeds match --sources {args.sources}"
+        if not seeds:
+            parser.error(f"no seeds match --sources {args.sources}")
+
+    spark = get_spark("crawl-main", master=args.master)
+    if pages_rows is not None:
+        pages = webgen.pages_df(spark, pages_rows)
+        robots = webgen.robots_df(spark, robots_rows)
+    else:
+        pages = spark.read.schema(PAGES_SCHEMA).parquet(args.pages)
+        robots = spark.read.schema(ROBOTS_SCHEMA).parquet(args.robots)
 
     cfg = CrawlConfig(
         round_budget=args.budget,
         max_rounds=args.rounds,
         checkpoint_dir=args.checkpoint,
         allowed_domains=cfg_domains,
-        seen_filter=args.seen_filter,
         hot_hosts_k=args.hot_hosts_k,
         seen_hll_log2m=args.seen_hll_log2m,
         recrawl_policy=args.recrawl_policy,
     )
     eng = CrawlEngine(spark, pages, robots, cfg)
     if args.retract:
-        # frontier retraction against an existing checkpoint (cuckoo
-        # arm): rewrites the committed seen deltas + blocks in place,
-        # so a subsequent --resume (this invocation or a later one)
-        # can re-discover and re-fetch the URLs.
-        assert args.checkpoint and args.seen_filter == "cuckoo", (
-            "--retract requires --checkpoint and --seen-filter cuckoo"
-        )
+        # frontier retraction against an existing checkpoint: rewrites
+        # the committed seen deltas and rebuilds the bloom blocks, so
+        # a subsequent --resume (this invocation or a later one) can
+        # re-discover and re-fetch the URLs.
         from goto_eater_crawler_spark.plans.crawl import SEEN_SCHEMA
         from goto_eater_crawler_spark.schema import BLOOM_BLOCK_SCHEMA
 
         committed = eng.store.committed_rounds()
-        assert committed, "--retract needs an existing committed checkpoint"
+        if not committed:
+            parser.error("--retract needs an existing committed checkpoint")
         seen = eng.store.read_many(committed, "seen_delta", SEEN_SCHEMA)
         blocks = eng.store.read(committed[-1], "blocks", BLOOM_BLOCK_SCHEMA)
         _, _, retracted = eng.retract(
