@@ -509,7 +509,6 @@ class CrawlEngine:
         blocks')``.
         """
         from ..operators.xorfilter import build_shard_filters
-        from ..schema import XOR_SNAPSHOT_SCHEMA  # noqa: F401  (schema home)
 
         filters = build_shard_filters(
             seen.select("url_hash"), n_shards=XOR_SNAPSHOT_SHARDS
@@ -641,16 +640,11 @@ class CrawlEngine:
         fetch_seq_offset: int,
         metrics: list[dict],
     ) -> CrawlResult:
-        cfg = self.cfg
-        records_parts: list[DataFrame] = []
-        log_parts: list[DataFrame] = []
-        done_rounds: list[int] = []
-        round_no = start_round
         pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="mat")
         try:
             return self._loop_body(
                 frontier, seen, blocks, start_round, fetch_seq_offset,
-                metrics, pool, records_parts, log_parts, done_rounds,
+                metrics, pool,
             )
         finally:
             # a failed round must not leak the 4 'mat' threads for the
@@ -666,11 +660,11 @@ class CrawlEngine:
         fetch_seq_offset: int,
         metrics: list[dict],
         pool: ThreadPoolExecutor,
-        records_parts: list[DataFrame],
-        log_parts: list[DataFrame],
-        done_rounds: list[int],
     ) -> CrawlResult:
         cfg = self.cfg
+        records_parts: list[DataFrame] = []
+        log_parts: list[DataFrame] = []
+        done_rounds: list[int] = []
         round_no = start_round
         hll_regs = None
         if cfg.seen_hll_log2m:

@@ -4,6 +4,9 @@ parquet dir, compare row count, column names, and order-insensitive
 values (floats rounded in-query on both sides).
 
 usage: python tools/check_oracle.py [sf_dir] [name ...]
+
+Names that are not registered are rejected (exit 2) before Spark
+starts.
 """
 
 from __future__ import annotations
@@ -40,6 +43,10 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown gate names: {' '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
 
     spark = get_spark("check-oracle", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
