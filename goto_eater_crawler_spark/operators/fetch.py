@@ -12,13 +12,18 @@ Join strategy: a crawl round is tiny next to the pages corpus
 side to move: pages bucketed/partitioned by url so the join prunes or
 co-locates, never a pages shuffle. Locally AQE turns the small
 frontier into the broadcast side automatically; ``strategy`` pins a
-plan for tests ('broadcast' | 'shuffle' | 'auto').
+plan (:data:`FETCH_STRATEGIES`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# 'auto': AQE picks; 'broadcast': the frontier is the broadcast side;
+# 'sortmerge': sort-merge, which against a pages table bucketed by url
+# (write_bucketed_pages) shuffles only the frontier
+FETCH_STRATEGIES = ("auto", "broadcast", "sortmerge")
 
 
 def fetch_join(
@@ -28,11 +33,13 @@ def fetch_join(
     canonical_url. Returns (fetched, missed): ``fetched`` = frontier
     columns + ``html``; ``missed`` = frontier columns.
     """
+    if strategy not in FETCH_STRATEGIES:
+        raise ValueError(
+            f"fetch strategy must be one of {FETCH_STRATEGIES}, got {strategy!r}"
+        )
     left = selected
     if strategy == "broadcast":
         left = F.broadcast(left)
-    elif strategy == "shuffle":
-        left = left.hint("shuffle_hash")
     elif strategy == "sortmerge":
         left = left.hint("merge")
     right = pages.select(F.col("url").alias("_page_url"), "html")
@@ -60,13 +67,3 @@ def write_bucketed_pages(
         .saveAsTable(table)
     )
 
-
-def bucketed_fetch_join(
-    selected: DataFrame, pages_table: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Fetch join against a bucketed pages table: sort-merge with
-    bucket pruning of the shuffle — pages side reads its buckets
-    in-place (zero Exchange), only the slim frontier shuffles to
-    match the bucketing. Use when the round frontier is too large to
-    broadcast (early rounds of a 10^10 crawl)."""
-    return fetch_join(selected, pages_table, strategy="sortmerge")

@@ -1,27 +1,19 @@
-"""Recrawl / scheduling policy arm for the crawl loop (VERDICT r4
-ask #7): the UCB1 / CUSUM / SES machinery that rounds 3-4 proved as
-standalone oracle gates (``crawl_ucb_recrawl``,
-``recrawl_cusum_change``, ``recrawl_ses_forecast`` in
-plans/queries.py) wired into ``CrawlEngine.run_rounds`` as an
-optional per-host priority boost.
+"""UCB1 recrawl policy for the crawl loop: an optional per-host
+priority boost that ``CrawlEngine`` applies to each round's links.
+
+The reference crawl gives every request the same priority; this arm
+is opt-in (``CrawlConfig.recrawl_policy = "ucb"``). It is the only
+policy: on the recrawl fixture web, SES and CUSUM boosts fetched and
+discovered as many URLs per round, in the same number of rounds, as
+UCB1 and as no policy at all, so they were dropped.
 
 Model: each HOST is a bandit arm. A round in which the host had at
 least one fetched page is a PLAY; the reward indicator for that play
 is x = 1 iff the round discovered at least one NEW frontier URL on
-that host (novelty yield — the live-crawl analogue of the gates'
-update/error change indicator; new URLs are attributed to the host
-they point AT, the slim relation the loop already materializes).
-The per-host observation series folds round-by-round in the driver
-loop — the same sequential fold the oracle gates express over the
-events table, applied incrementally:
-
-* plays/changes: exact integer counts (UCB1's n and reward sum);
-* ``ses_level``: s <- (s + x) / 2, seeded with the first x — the
-  recrawl_ses_forecast dyadic fold (float-exact, order = round
-  order);
-* ``cusum_q``/``alarms``: S <- max(0, S + x - k) with k = 0.25 in
-  integer QUARTER units, alarm-and-restart at h = 2.0 (S_q >= 8) —
-  the recrawl_cusum_change fold.
+that host (novelty yield; new URLs are attributed to the host they
+point AT, the slim relation the loop already materializes). The
+per-host state is two exact integer counts, folded once per round in
+round order: plays (UCB1's n) and changes (its reward sum).
 
 Scale shape: the state is one slim row per host (the |hosts|
 relation, never the frontier or the log); each round's update is one
@@ -30,9 +22,8 @@ aggregate, and the boost application is a broadcast join onto the
 link batch. Resume-safe: the state table checkpoints through the
 round store like every other round artifact.
 
-References (public): Auer, Cesa-Bianchi & Fischer, Machine Learning
-2002 (UCB1); Page, Biometrika 1954 (CUSUM); Brown 1956 /
-Cho & Garcia-Molina, TOIT 2003 (freshness smoothing).
+Reference (public): Auer, Cesa-Bianchi & Fischer, Machine Learning
+2002 (UCB1).
 """
 
 from __future__ import annotations
@@ -46,18 +37,10 @@ POLICY_STATE_SCHEMA = T.StructType(
         T.StructField("host", T.StringType(), False),
         T.StructField("plays", T.LongType(), False),
         T.StructField("changes", T.LongType(), False),
-        T.StructField("ses_level", T.DoubleType(), False),
-        T.StructField("cusum_q", T.LongType(), False),
-        T.StructField("alarms", T.LongType(), False),
     ]
 )
 
-POLICIES = ("ucb", "ses", "cusum")
-
-# CUSUM constants in quarter units (k = 0.25, h = 2.0 — dyadic, same
-# as the recrawl_cusum_change gate)
-_K_Q = 1
-_H_Q = 8
+POLICIES = ("ucb",)
 
 
 def empty_state(spark) -> DataFrame:
@@ -92,24 +75,16 @@ def round_observations(
 def update_state(state: DataFrame, obs: DataFrame) -> DataFrame:
     """One round's sequential fold step: full-outer join of the slim
     per-host state with the round's (host, x) observations. Hosts not
-    played this round carry state forward unchanged; new hosts seed
-    with their first observation (SES seed = first x, the gate's
-    fold seed)."""
+    played this round carry state forward unchanged; new hosts start
+    at one play."""
     s = state.select(
         "host",
         F.col("plays").alias("_plays"),
         F.col("changes").alias("_changes"),
-        F.col("ses_level").alias("_ses"),
-        F.col("cusum_q").alias("_q"),
-        F.col("alarms").alias("_alarms"),
     )
     j = s.join(obs, "host", "full_outer")
-    seen_before = F.col("_plays").isNotNull()
     played_now = F.col("x").isNotNull()
     x = F.coalesce(F.col("x"), F.lit(0)).cast("long")
-    # CUSUM pre-clamp value for a played round
-    pre_q = F.coalesce(F.col("_q"), F.lit(0)) + 4 * x - _K_Q
-    alarm = pre_q >= _H_Q
     return j.select(
         "host",
         F.when(
@@ -118,57 +93,23 @@ def update_state(state: DataFrame, obs: DataFrame) -> DataFrame:
         F.when(
             played_now, F.coalesce(F.col("_changes"), F.lit(0)) + x
         ).otherwise(F.col("_changes")).cast("long").alias("changes"),
-        F.when(~played_now, F.col("_ses"))
-        .when(~seen_before, x.cast("double"))  # SES seed = first x
-        .otherwise((F.col("_ses") + x) / F.lit(2.0))
-        .cast("double")
-        .alias("ses_level"),
-        F.when(~played_now, F.col("_q"))
-        .when(alarm, F.lit(0))
-        .otherwise(F.greatest(pre_q, F.lit(0)))
-        .cast("long")
-        .alias("cusum_q"),
-        F.when(~played_now, F.col("_alarms"))
-        .otherwise(
-            F.coalesce(F.col("_alarms"), F.lit(0))
-            + F.when(alarm, 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("alarms"),
     )
 
 
-def policy_boosts(state: DataFrame, policy: str) -> DataFrame:
+def policy_boosts(state: DataFrame) -> DataFrame:
     """(host, boost) dim from the current state — slim (|hosts|
-    rows), broadcast onto the link batch by the caller.
-
-    * ``ucb``  — UCB1 score: changes/plays + sqrt(2 ln N / plays),
-      N = total plays across hosts (exploit fast-yielding hosts,
-      re-explore rarely-played ones);
-    * ``ses``  — the recency-weighted yield level in [0, 1];
-    * ``cusum``— alarms + S/h: every detected change-point adds a
-      full unit, the fractional term ranks the not-yet-alarmed.
-    """
-    if policy == "ucb":
-        tot = state.agg(F.sum("plays").cast("double").alias("_n"))
-        return state.crossJoin(F.broadcast(tot)).select(
-            "host",
-            (
-                F.col("changes").cast("double") / F.col("plays")
-                + F.sqrt(
-                    2.0 * F.log(F.greatest(F.col("_n"), F.lit(2.0)))
-                    / F.col("plays")
-                )
-            ).alias("boost"),
-        )
-    if policy == "ses":
-        return state.select("host", F.col("ses_level").alias("boost"))
-    if policy == "cusum":
-        return state.select(
-            "host",
-            (
-                F.col("alarms").cast("double")
-                + F.col("cusum_q").cast("double") / F.lit(4.0) / F.lit(2.0)
-            ).alias("boost"),
-        )
-    raise ValueError(f"unknown recrawl policy {policy!r}; use {POLICIES}")
+    rows), broadcast onto the link batch by the caller. The boost is
+    the UCB1 score changes/plays + sqrt(2 ln N / plays), N = total
+    plays across hosts (exploit fast-yielding hosts, re-explore
+    rarely-played ones)."""
+    tot = state.agg(F.sum("plays").cast("double").alias("_n"))
+    return state.crossJoin(F.broadcast(tot)).select(
+        "host",
+        (
+            F.col("changes").cast("double") / F.col("plays")
+            + F.sqrt(
+                2.0 * F.log(F.greatest(F.col("_n"), F.lit(2.0)))
+                / F.col("plays")
+            )
+        ).alias("boost"),
+    )

@@ -47,17 +47,9 @@ from pyspark.sql import functions as F
 _M64 = (1 << 64) - 1
 
 
-def _splitmix64(x: int) -> int:
-    """SplitMix64 finalizer (Steele, Lea & Flood 2014) — the public
-    mixing constant set; also used by xorshift seeding everywhere."""
-    x = (x + 0x9E3779B97F4A7C15) & _M64
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _M64
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _M64
-    return x ^ (x >> 31)
-
-
 def _mix_np(keys: np.ndarray, seed: int) -> np.ndarray:
-    """Vectorized SplitMix64 over uint64 keys."""
+    """Vectorized SplitMix64 finalizer (Steele, Lea & Flood 2014) over
+    uint64 keys."""
     x = (keys + np.uint64((0x9E3779B97F4A7C15 + seed * 0xFF51AFD7ED558CCD) & _M64)).astype(np.uint64)
     x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)

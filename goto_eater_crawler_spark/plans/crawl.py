@@ -55,7 +55,7 @@ from pyspark.sql import types as T
 from ..functions.urltools import host_col, with_url_identity
 from ..operators.dedup import BloomParams, build_blocks, split_new_urls, update_blocks
 from ..operators.extract import run_extract, split_pages, split_records_links
-from ..operators.fetch import fetch_join
+from ..operators.fetch import FETCH_STRATEGIES, fetch_join
 from ..operators.politeness import (
     domains_dim,
     offsite_split,
@@ -91,7 +91,8 @@ HOT_HOSTS_CAPACITY = 4096
 # shard count of the immutable xor-filter seen snapshot
 # (freeze_seen_snapshot): at 10^10 keys, shards scale the per-blob
 # size and the build parallelism; the per-shard blobs broadcast to the
-# probe. Still written into each manifest, so checkpoints record it.
+# probe. Written into each manifest; resume refuses a checkpoint
+# whose count differs.
 XOR_SNAPSHOT_SHARDS = 8
 # recrawl-policy priority boost: priority = base + RECRAWL_WEIGHT *
 # boost(host); hosts with no policy state yet get RECRAWL_UNSEEN_BOOST
@@ -109,6 +110,7 @@ class CrawlConfig:
     # disables filtering (every candidate goes to the exact anti-join).
     # The exact-semantics contract is identical either way.
     bloom: BloomParams | None = field(default_factory=BloomParams)
+    # fetch join plan, one of operators/fetch.FETCH_STRATEGIES
     fetch_strategy: str = "auto"
     checkpoint_dir: str | None = None
     assign_fetch_seq: bool = True
@@ -130,26 +132,16 @@ class CrawlConfig:
     # set, each round's metrics carry ``hot_hosts`` = the top-k
     # (host, lower-bound count) pairs over that round's fetched rows
     # plus the sketch's global error bound (HOT_HOSTS_CAPACITY
-    # counters per partition). None = off (default).
+    # counters per partition). None = off (default); else >= 1.
     hot_hosts_k: int | None = None
-    # optional recrawl/scheduling policy arm (VERDICT r4 ask #7 —
-    # operators/recrawl): None (static priority) | "ucb" | "ses" |
-    # "cusum". When set, each round folds a per-host novelty-yield
-    # indicator into a slim policy state (checkpointed through the
-    # store like every round artifact — resume-safe) and the NEXT
-    # round's link priorities become
+    # optional recrawl policy (operators/recrawl): None (static
+    # priority) | "ucb". When set, each round folds a per-host
+    # novelty-yield indicator into a slim (host, plays, changes) state
+    # (checkpointed through the store like every round artifact —
+    # resume-safe) and the NEXT round's link priorities become
     #   priority = base(host_rank, depth) + RECRAWL_WEIGHT * boost
-    # where boost is the UCB1 score / SES level / CUSUM alarm count
-    # of the link's host.
+    # where boost is the UCB1 score of the link's host.
     recrawl_policy: str | None = None
-    # incremental seen-set cardinality estimate via HyperLogLog
-    # (operators/sketches — VERDICT r3 ask #8): when set (register
-    # count log2), the loop carries <= 2^log2m register rows as state,
-    # folds each round's seen delta in by groupBy-max (associative +
-    # idempotent, the retry-safety class of the bloom OR), and stamps
-    # ``seen_distinct_est`` into the round metrics — the 10^10-scale
-    # cardinality counter that never rescans the seen set. None = off.
-    seen_hll_log2m: int | None = None
 
 
 @dataclass
@@ -240,15 +232,6 @@ def _log_rows(df: DataFrame, round_no: int, status: str) -> DataFrame:
     )
 
 
-def _hll_key(seen_like: DataFrame) -> DataFrame:
-    """HLL key prep for url_hash rows: fold the signed 64-bit hash
-    into 31 bits so the sketch's Knuth multiply (k * 2654435761)
-    stays inside a signed long — a hash of a hash is still a hash."""
-    return seen_like.select(
-        F.pmod(F.col("url_hash"), F.lit(1 << 31)).cast("long").alias("k")
-    )
-
-
 class CrawlEngine:
     def __init__(
         self,
@@ -299,6 +282,15 @@ class CrawlEngine:
                     f"recrawl_policy must be one of {POLICIES}, "
                     f"got {self.cfg.recrawl_policy!r}"
                 )
+        if self.cfg.fetch_strategy not in FETCH_STRATEGIES:
+            raise ValueError(
+                f"fetch_strategy must be one of {FETCH_STRATEGIES}, "
+                f"got {self.cfg.fetch_strategy!r}"
+            )
+        if self.cfg.hot_hosts_k is not None and self.cfg.hot_hosts_k < 1:
+            raise ValueError(
+                f"hot_hosts_k must be None or >= 1, got {self.cfg.hot_hosts_k!r}"
+            )
 
     def _prioritize(self, df: DataFrame) -> DataFrame:
         """priority column per the configured policy: host-rank-driven
@@ -315,9 +307,7 @@ class CrawlEngine:
         if self.cfg.recrawl_policy is not None and self.policy_state is not None:
             from ..operators.recrawl import policy_boosts
 
-            boosts = policy_boosts(
-                self.policy_state, self.cfg.recrawl_policy
-            )
+            boosts = policy_boosts(self.policy_state)
             df = (
                 df.join(F.broadcast(boosts), "host", "left")
                 .withColumn(
@@ -329,17 +319,6 @@ class CrawlEngine:
                 .drop("boost")
             )
         return df
-
-    # -- state helpers ------------------------------------------------
-
-    def _materialize(self, df: DataFrame, round_no: int, name: str) -> DataFrame:
-        """Cut lineage each round through the store (durable write +
-        lineage-free reader when persistent, localCheckpoint in
-        memory mode)."""
-        return self.store.write(df, round_no, name)
-
-    def _commit_round(self, round_no: int, info: dict) -> None:
-        self.store.commit_round(round_no, info)
 
     # -- seed prep ----------------------------------------------------
 
@@ -405,11 +384,11 @@ class CrawlEngine:
             if self.cfg.bloom is not None
             else None
         )
-        frontier = self._materialize(frontier, 0, "frontier")
-        seen = self._materialize(seen, 0, "seen_delta")
+        frontier = self.store.write(frontier, 0, "frontier")
+        seen = self.store.write(seen, 0, "seen_delta")
         if blocks is not None:
-            blocks = self._materialize(blocks, 0, "blocks")
-        self._commit_round(0, {"round": 0, "fetch_seq_offset": 0, "metrics": []})
+            blocks = self.store.write(blocks, 0, "blocks")
+        self.store.commit_round(0, {"round": 0, "fetch_seq_offset": 0, "metrics": []})
         return frontier, seen, blocks
 
     def run_rounds(
@@ -443,6 +422,14 @@ class CrawlEngine:
                 f"nothing committed to resume from in {config.checkpoint_dir}"
             )
         info = eng.store.round_info(committed[-1])
+        # the xor snapshot's blobs are keyed by shard; probing them
+        # with another shard count would read seen URLs as new
+        shards = info.get("xor_snapshot_shards")
+        if shards is not None and shards != XOR_SNAPSHOT_SHARDS:
+            raise ValueError(
+                f"checkpoint xor snapshot has {shards} shards, "
+                f"this engine probes {XOR_SNAPSHOT_SHARDS}"
+            )
         last_no = info["round"]
         frontier = eng.store.read(last_no, "frontier", FRONTIER_SCHEMA)
         seen = eng.store.read_many(committed, "seen_delta", SEEN_SCHEMA)
@@ -520,13 +507,13 @@ class CrawlEngine:
         )
         if self.store.persistent:
             last = self.store.committed_rounds()[-1]
-            filters = self._materialize(filters, last, "xor_snapshot")
+            filters = self.store.write(filters, last, "xor_snapshot")
             if new_blocks is not None:
-                new_blocks = self._materialize(new_blocks, last, "blocks")
+                new_blocks = self.store.write(new_blocks, last, "blocks")
             info = self.store.round_info(last)
             info["xor_snapshot_round"] = last
             info["xor_snapshot_shards"] = XOR_SNAPSHOT_SHARDS
-            self._commit_round(last, info)
+            self.store.commit_round(last, info)
             self._xor_round = last
         else:
             filters = filters.localCheckpoint(eager=True)
@@ -595,7 +582,7 @@ class CrawlEngine:
             # anti-join (memory), never the pre-compaction files
             new_blocks = build_blocks(new_seen.select("url_hash"), self.cfg.bloom)
             if self.store.persistent:
-                new_blocks = self._materialize(new_blocks, committed[-1], "blocks")
+                new_blocks = self.store.write(new_blocks, committed[-1], "blocks")
             else:
                 new_blocks = new_blocks.localCheckpoint(eager=True)
         return new_seen, new_blocks, retracted
@@ -666,16 +653,6 @@ class CrawlEngine:
         log_parts: list[DataFrame] = []
         done_rounds: list[int] = []
         round_no = start_round
-        hll_regs = None
-        if cfg.seen_hll_log2m:
-            from ..operators.sketches import hll_registers
-
-            # bootstrap the register state from the incoming seen set
-            # (one pass at loop entry — resume included); thereafter
-            # only per-round DELTAS are sketched and merged.
-            hll_regs = hll_registers(
-                _hll_key(seen), "k", cfg.seen_hll_log2m
-            ).localCheckpoint(eager=True)
         while round_no <= cfg.max_rounds and not frontier.isEmpty():
             allowed, robots_dropped = robots_split(frontier, self.robots)
             selected, _ = quota_split(
@@ -810,7 +787,7 @@ class CrawlEngine:
                     for v in ("exact", "bloom_definite", "bloom_fp")
                 ],
             )
-            new_rows = self._materialize(new_rows, round_no, "new_rows")
+            new_rows = self.store.write(new_rows, round_no, "new_rows")
 
             # retries: miss -> re-enqueue decayed, or dead-letter
             can_retry = F.col("retry_count") + 1 <= F.lit(cfg.max_retries)
@@ -864,7 +841,7 @@ class CrawlEngine:
                 )
                 old_blocks = blocks
                 futs["blocks"] = pool.submit(
-                    self._materialize, new_blocks, round_no, "blocks"
+                    self.store.write, new_blocks, round_no, "blocks"
                 )
             # status/record counters ride the materialization jobs as
             # Observations — no separate stats job or extra scan
@@ -879,13 +856,13 @@ class CrawlEngine:
             obs_rec = Observation(f"rec_{round_no}")
             records = records.observe(obs_rec, F.count(F.lit(1)).alias("n"))
             futs["fetch_log"] = pool.submit(
-                self._materialize, round_log, round_no, "fetch_log"
+                self.store.write, round_log, round_no, "fetch_log"
             )
             futs["records"] = pool.submit(
-                self._materialize, records, round_no, "records"
+                self.store.write, records, round_no, "records"
             )
             futs["frontier"] = pool.submit(
-                self._materialize, next_frontier, round_no, "frontier"
+                self.store.write, next_frontier, round_no, "frontier"
             )
             if blocks is not None:
                 blocks = futs["blocks"].result()
@@ -900,7 +877,7 @@ class CrawlEngine:
                 # the round's ALREADY-MATERIALIZED slim artifacts, the
                 # state is one row per host, and the fold runs once per
                 # round in round order — the sequential semantics the
-                # recrawl_{ucb,ses,cusum} gates pin. Checkpointed
+                # crawl_ucb_recrawl gate pins. Checkpointed
                 # through the store so resume reattaches it exactly.
                 from ..operators import recrawl as _rc
 
@@ -910,7 +887,7 @@ class CrawlEngine:
                     if self.policy_state is not None
                     else _rc.empty_state(self.spark)
                 )
-                self.policy_state = self._materialize(
+                self.policy_state = self.store.write(
                     _rc.update_state(prev_state, obs),
                     round_no,
                     "policy_state",
@@ -975,25 +952,6 @@ class CrawlEngine:
                         raise
                     dropped = 0
                 m["xor_snapshot_dropped"] = int(dropped or 0)
-            if hll_regs is not None:
-                from ..operators.sketches import hll_estimate, hll_registers
-
-                # merge the delta's registers by max (associative,
-                # idempotent — a replayed round changes nothing), keep
-                # the tiny (<= 2^log2m rows) state flat via checkpoint
-                hll_regs = (
-                    hll_regs.unionByName(
-                        hll_registers(
-                            _hll_key(seen_delta), "k", cfg.seen_hll_log2m
-                        )
-                    )
-                    .groupBy("reg")
-                    .agg(F.max("mr").alias("mr"))
-                    .localCheckpoint(eager=True)
-                )
-                m["seen_distinct_est"] = hll_estimate(
-                    hll_regs, cfg.seen_hll_log2m
-                ).collect()[0]["est"]
             fetch_seq_offset += m["fetched"]
 
             if self.store.persistent:
@@ -1002,7 +960,7 @@ class CrawlEngine:
                 # rows), then rebuild `seen` as ONE flat multi-path
                 # parquet scan of every delta so far — a per-round
                 # unionByName fold would grow the plan O(rounds) deep.
-                self._materialize(seen_delta, round_no, "seen_delta")
+                self.store.write(seen_delta, round_no, "seen_delta")
                 seen = self.store.read_many(
                     self.store.committed_rounds() + [round_no],
                     "seen_delta",
@@ -1032,7 +990,7 @@ class CrawlEngine:
                 # ANY later round reattaches the tier
                 round_info["xor_snapshot_round"] = self._xor_round
                 round_info["xor_snapshot_shards"] = XOR_SNAPSHOT_SHARDS
-            self._commit_round(round_no, round_info)
+            self.store.commit_round(round_no, round_info)
             selected.unpersist()
             extracted.unpersist()
 

@@ -17,7 +17,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.urltools import canonicalize_url, url_host
+from ..functions.urltools import canonicalize_url
 from ..schema import PAGES_SCHEMA, ROBOTS_SCHEMA
 from .families import FAMILIES
 
@@ -83,19 +83,3 @@ def pages_df(spark: SparkSession, pages: list[dict]) -> DataFrame:
 def robots_df(spark: SparkSession, robots: list[dict]) -> DataFrame:
     return spark.createDataFrame(robots, ROBOTS_SCHEMA)
 
-
-def seed_rows_with_identity(seeds: list[dict]) -> list[dict]:
-    """Driver-side seed prep: canonical url, host, defaults."""
-    out = []
-    for s in seeds:
-        canon = canonicalize_url(s["url"])
-        out.append(
-            {
-                **s,
-                "url": s["url"],
-                "canonical_url": canon,
-                "host": url_host(s["url"]),
-                "retry_count": 0,
-            }
-        )
-    return out

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from goto_eater_crawler_spark.operators.fetch import (
-    bucketed_fetch_join,
     fetch_join,
     write_bucketed_pages,
 )
@@ -52,7 +51,7 @@ def _frontier(spark, n=300):
 
 def test_no_exchange_on_pages_side(spark, bucketed):
     frontier = _frontier(spark)
-    fetched, _ = bucketed_fetch_join(frontier, bucketed)
+    fetched, _ = fetch_join(frontier, bucketed, "sortmerge")
     plan = fetched._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
     # exactly ONE shuffle in the whole join — the frontier side; the
@@ -65,7 +64,7 @@ def test_no_exchange_on_pages_side(spark, bucketed):
 
 def test_bucketed_results_match_plain_join(spark, bucketed):
     frontier = _frontier(spark)
-    fetched_b, missed_b = bucketed_fetch_join(frontier, bucketed)
+    fetched_b, missed_b = fetch_join(frontier, bucketed, "sortmerge")
     fetched_p, missed_p = fetch_join(frontier, bucketed, "broadcast")
     got_b = {(r["fid"], bytes(r["html"])) for r in fetched_b.collect()}
     got_p = {(r["fid"], bytes(r["html"])) for r in fetched_p.collect()}

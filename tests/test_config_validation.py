@@ -7,13 +7,20 @@ through ``argparse``'s ``parser.error`` (exit status 2)."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import subprocess
 import sys
 
 import pytest
 
-from goto_eater_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine
+from goto_eater_crawler_spark.operators.fetch import fetch_join
+from goto_eater_crawler_spark.plans.crawl import (
+    XOR_SNAPSHOT_SHARDS,
+    CrawlConfig,
+    CrawlEngine,
+)
+from goto_eater_crawler_spark.plans.store import ParquetManifestStore
 from goto_eater_crawler_spark.sources import webgen
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,8 +39,51 @@ def tiny_web(spark):
 
 
 def test_unknown_recrawl_policy_raises(spark, tiny_web):
-    with pytest.raises(ValueError, match="recrawl_policy"):
-        CrawlEngine(spark, *tiny_web, CrawlConfig(recrawl_policy="bogus"))
+    # ses and cusum were policies once; ucb is the only one kept
+    for policy in ("bogus", "ses", "cusum"):
+        with pytest.raises(ValueError, match="recrawl_policy"):
+            CrawlEngine(spark, *tiny_web, CrawlConfig(recrawl_policy=policy))
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [
+        ("fetch_strategy", "shuffle"),
+        ("fetch_strategy", "broadcst"),
+        ("hot_hosts_k", 0),
+        ("hot_hosts_k", -1),
+    ],
+)
+def test_out_of_range_config_raises(spark, tiny_web, field, value):
+    with pytest.raises(ValueError, match=field):
+        CrawlEngine(spark, *tiny_web, CrawlConfig(**{field: value}))
+
+
+def test_fetch_join_rejects_unknown_strategy(spark):
+    with pytest.raises(ValueError, match="fetch strategy"):
+        fetch_join(spark.range(1), spark.range(1), "shuffle")
+
+
+def test_resume_rejects_other_xor_snapshot_shard_count(
+    spark, tiny_web, tmp_path
+):
+    """A checkpoint frozen with another shard count must not be probed
+    with this engine's count: the check fires before any table read,
+    so a hand-written manifest is enough."""
+    round_dir = tmp_path / "rounds" / "round=0001"
+    round_dir.mkdir(parents=True)
+    (round_dir / "manifest.json").write_text(json.dumps({
+        "round": 1,
+        "fetch_seq_offset": 0,
+        "metrics": [],
+        "xor_snapshot_round": 1,
+        "xor_snapshot_shards": XOR_SNAPSHOT_SHARDS * 2,
+    }))
+    assert ParquetManifestStore(spark, str(tmp_path)).committed_rounds() == [1]
+    with pytest.raises(ValueError, match="shards"):
+        CrawlEngine.resume(
+            spark, *tiny_web, CrawlConfig(checkpoint_dir=str(tmp_path))
+        )
 
 
 def test_resume_without_checkpoint_dir_raises(spark, tiny_web):
@@ -55,6 +105,12 @@ def test_resume_from_empty_checkpoint_raises(spark, tiny_web, tmp_path):
         ([], "--pages/--robots/--seeds required"),
         (["--fixture", "--sources", "no_such_source"], "no seeds match"),
         (["--fixture", "--retract", "https://x.example/"], "requires --checkpoint"),
+        # --sources matches nothing, so a parser that accepted the
+        # option would still stop before Spark starts
+        (["--fixture", "--recrawl-policy", "ses", "--sources", "no_such_source"],
+         "invalid choice"),
+        (["--fixture", "--seen-hll-log2m", "6", "--sources", "no_such_source"],
+         "unrecognized arguments"),
     ],
 )
 def test_crawl_main_argument_errors(argv, message, capsys):

@@ -24,6 +24,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from goto_eater_crawler_spark.operators.recrawl import POLICIES  # noqa: E402
 from goto_eater_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine  # noqa: E402
 from goto_eater_crawler_spark.schema import PAGES_SCHEMA, ROBOTS_SCHEMA  # noqa: E402
 from goto_eater_crawler_spark.session import get_spark  # noqa: E402
@@ -56,17 +57,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--hot-hosts-k", type=int, default=None,
                    help="per-round top-k hot hosts in the metrics via the "
                         "Misra-Gries sketch (bounded memory at any scale)")
-    p.add_argument("--seen-hll-log2m", type=int, default=None,
-                   help="per-round seen-set cardinality estimate in the "
-                        "metrics via incremental HyperLogLog (2^log2m "
-                        "registers)")
-    p.add_argument("--recrawl-policy", default=None,
-                   choices=("ucb", "ses", "cusum"),
-                   help="optional per-host scheduling policy arm "
-                        "(operators/recrawl): UCB1 bandit / SES "
-                        "forecast / CUSUM change alarm folded into "
-                        "link priorities each round; state checkpoints "
-                        "with the crawl and survives --resume")
+    p.add_argument("--recrawl-policy", default=None, choices=POLICIES,
+                   help="optional per-host recrawl policy "
+                        "(operators/recrawl): a UCB1 bandit score folded "
+                        "into link priorities each round; state "
+                        "checkpoints with the crawl and survives --resume")
     p.add_argument("--retract", default="",
                    help="comma-separated URLs to retract from the seen set "
                         "of an existing checkpoint (requires --checkpoint; "
@@ -134,7 +129,6 @@ def main(argv=None) -> int:
         checkpoint_dir=args.checkpoint,
         allowed_domains=cfg_domains,
         hot_hosts_k=args.hot_hosts_k,
-        seen_hll_log2m=args.seen_hll_log2m,
         recrawl_policy=args.recrawl_policy,
     )
     eng = CrawlEngine(spark, pages, robots, cfg)
