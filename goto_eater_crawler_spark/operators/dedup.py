@@ -166,26 +166,21 @@ def bloom_maybe_hashes(
 
 def split_new_urls(
     candidates: DataFrame,
-    blocks: DataFrame | None,
+    blocks: DataFrame,
     exact_seen: DataFrame,
     params: BloomParams,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Return (new_rows, definite_new, fp_confirm_checked).
 
     - ``new_rows``: candidate rows NOT in the seen set (exact
-      semantics — bloom only accelerates).
-    - ``definite_new``: the subset that skipped the exact check
-      (bloom said no) — for counters.
+      semantics — bloom only accelerates), each with a ``via`` column
+      naming the path that admitted it: ``bloom_definite`` or
+      ``bloom_fp``.
+    - ``definite_new``: the subset the bloom proved new, which skipped
+      the exact check — for counters.
     - ``fp_confirm_checked``: maybe-seen rows that the exact table
       proved new (= bloom false positives) — for the FP counter.
     """
-    if blocks is None:
-        new_rows = candidates.join(
-            exact_seen.select("canonical_url"), "canonical_url", "left_anti"
-        ).withColumn("via", F.lit("exact"))
-        empty = new_rows.limit(0)
-        return new_rows, empty, empty
-
     maybe = bloom_maybe_hashes(candidates, blocks, params)
     definite_new = candidates.join(maybe, "url_hash", "left_anti").withColumn(
         "via", F.lit("bloom_definite")

@@ -94,11 +94,6 @@ HOT_HOSTS_CAPACITY = 4096
 # probe. Written into each manifest; resume refuses a checkpoint
 # whose count differs.
 XOR_SNAPSHOT_SHARDS = 8
-# recrawl-policy priority boost: priority = base + RECRAWL_WEIGHT *
-# boost(host); hosts with no policy state yet get RECRAWL_UNSEEN_BOOST
-# (UCB's play-every-arm-once rule).
-RECRAWL_WEIGHT = 10.0
-RECRAWL_UNSEEN_BOOST = 4.0
 
 
 @dataclass
@@ -106,10 +101,11 @@ class CrawlConfig:
     round_budget: float = 60.0  # seconds of per-host politeness budget
     max_rounds: int = 64
     max_retries: int = 8  # reference settings.py:119
-    # partitioned bloom filter fronting the exact seen table; None
-    # disables filtering (every candidate goes to the exact anti-join).
-    # The exact-semantics contract is identical either way.
-    bloom: BloomParams | None = field(default_factory=BloomParams)
+    # partitioned bloom filter fronting the exact seen table: a
+    # "definitely new" verdict skips the exact anti-join, a "maybe
+    # seen" one is confirmed against it, so the filter only speeds up
+    # the check and never changes its answer
+    bloom: BloomParams = field(default_factory=BloomParams)
     # fetch join plan, one of operators/fetch.FETCH_STRATEGIES
     fetch_strategy: str = "auto"
     checkpoint_dir: str | None = None
@@ -134,14 +130,6 @@ class CrawlConfig:
     # plus the sketch's global error bound (HOT_HOSTS_CAPACITY
     # counters per partition). None = off (default); else >= 1.
     hot_hosts_k: int | None = None
-    # optional recrawl policy (operators/recrawl): None (static
-    # priority) | "ucb". When set, each round folds a per-host
-    # novelty-yield indicator into a slim (host, plays, changes) state
-    # (checkpointed through the store like every round artifact —
-    # resume-safe) and the NEXT round's link priorities become
-    #   priority = base(host_rank, depth) + RECRAWL_WEIGHT * boost
-    # where boost is the UCB1 score of the link's host.
-    recrawl_policy: str | None = None
 
 
 @dataclass
@@ -150,9 +138,9 @@ class CrawlResult:
     fetch_log: DataFrame
     seen: DataFrame
     metrics: list[dict]
-    # final bloom blocks (None when filtering is off) — what a
-    # continuation (retract + run_rounds) resumes from
-    blocks: DataFrame | None = None
+    # final bloom blocks — what a continuation (retract + run_rounds)
+    # resumes from
+    blocks: DataFrame
 
 
 def _valid_url() -> F.Column:
@@ -271,17 +259,10 @@ class CrawlEngine:
         # they were committed under
         self.xor_filters: DataFrame | None = None
         self._xor_round: int | None = None
-        # recrawl policy state (slim per-host relation) — None until
-        # the first round's observations fold in (or resume reattaches)
-        self.policy_state: DataFrame | None = None
-        if self.cfg.recrawl_policy is not None:
-            from ..operators.recrawl import POLICIES
-
-            if self.cfg.recrawl_policy not in POLICIES:
-                raise ValueError(
-                    f"recrawl_policy must be one of {POLICIES}, "
-                    f"got {self.cfg.recrawl_policy!r}"
-                )
+        if not isinstance(self.cfg.bloom, BloomParams):
+            raise ValueError(
+                f"bloom must be a BloomParams, got {self.cfg.bloom!r}"
+            )
         if self.cfg.fetch_strategy not in FETCH_STRATEGIES:
             raise ValueError(
                 f"fetch_strategy must be one of {FETCH_STRATEGIES}, "
@@ -293,32 +274,14 @@ class CrawlEngine:
             )
 
     def _prioritize(self, df: DataFrame) -> DataFrame:
-        """priority column per the configured policy: host-rank-driven
-        (O3: rank x W - depth) when ranks are supplied, flat default
-        otherwise; plus the optional recrawl-policy boost
-        (base + RECRAWL_WEIGHT * boost(host)) once per-host state
-        exists. Requires host/depth columns."""
+        """priority column: host-rank-driven (O3: rank x W - depth)
+        when ranks are supplied, flat default otherwise. Requires
+        host/depth columns."""
         if self.host_ranks is None:
-            df = df.withColumn("priority", priority_col())
-        else:
-            from ..operators.hostrank import with_host_rank
+            return df.withColumn("priority", priority_col())
+        from ..operators.hostrank import with_host_rank
 
-            df = with_host_rank(df, self.host_ranks)
-        if self.cfg.recrawl_policy is not None and self.policy_state is not None:
-            from ..operators.recrawl import policy_boosts
-
-            boosts = policy_boosts(self.policy_state)
-            df = (
-                df.join(F.broadcast(boosts), "host", "left")
-                .withColumn(
-                    "priority",
-                    F.col("priority")
-                    + F.lit(RECRAWL_WEIGHT)
-                    * F.coalesce(F.col("boost"), F.lit(RECRAWL_UNSEEN_BOOST)),
-                )
-                .drop("boost")
-            )
-        return df
+        return with_host_rank(df, self.host_ranks)
 
     # -- seed prep ----------------------------------------------------
 
@@ -368,7 +331,7 @@ class CrawlEngine:
 
     def bootstrap(
         self, seed_rows: list[dict] | DataFrame
-    ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Materialize round-0 state (frontier, seen, bloom blocks).
         Separated from the round loop so a steady-state benchmark can
         time rounds alone — a production crawl amortizes this one-time
@@ -379,15 +342,10 @@ class CrawlEngine:
             else self.seed_frontier(seed_rows)
         )
         seen = frontier.select("canonical_url", "url_hash")
-        blocks = (
-            build_blocks(seen.select("url_hash"), self.cfg.bloom)
-            if self.cfg.bloom is not None
-            else None
-        )
+        blocks = build_blocks(seen.select("url_hash"), self.cfg.bloom)
         frontier = self.store.write(frontier, 0, "frontier")
         seen = self.store.write(seen, 0, "seen_delta")
-        if blocks is not None:
-            blocks = self.store.write(blocks, 0, "blocks")
+        blocks = self.store.write(blocks, 0, "blocks")
         self.store.commit_round(0, {"round": 0, "fetch_seq_offset": 0, "metrics": []})
         return frontier, seen, blocks
 
@@ -395,7 +353,7 @@ class CrawlEngine:
         self,
         frontier: DataFrame,
         seen: DataFrame,
-        blocks: DataFrame | None,
+        blocks: DataFrame,
     ) -> CrawlResult:
         return self._loop(frontier, seen, blocks, 1, 0, [])
 
@@ -433,11 +391,7 @@ class CrawlEngine:
         last_no = info["round"]
         frontier = eng.store.read(last_no, "frontier", FRONTIER_SCHEMA)
         seen = eng.store.read_many(committed, "seen_delta", SEEN_SCHEMA)
-        blocks = (
-            eng.store.read(last_no, "blocks", BLOOM_BLOCK_SCHEMA)
-            if config.bloom is not None
-            else None
-        )
+        blocks = eng.store.read(last_no, "blocks", BLOOM_BLOCK_SCHEMA)
         xr = info.get("xor_snapshot_round")
         if xr is not None:
             from ..schema import XOR_SNAPSHOT_SCHEMA
@@ -446,15 +400,6 @@ class CrawlEngine:
                 xr, "xor_snapshot", XOR_SNAPSHOT_SCHEMA
             ).localCheckpoint(eager=True)
             eng._xor_round = xr
-        if config.recrawl_policy is not None and info.get("policy_state"):
-            # the manifest records whether the round wrote policy
-            # state; without the mark (policy enabled only at resume)
-            # the fold starts cold, same as a fresh crawl's first round
-            from ..operators.recrawl import POLICY_STATE_SCHEMA
-
-            eng.policy_state = eng.store.read(
-                last_no, "policy_state", POLICY_STATE_SCHEMA
-            )
         return eng._loop(
             frontier,
             seen,
@@ -467,8 +412,8 @@ class CrawlEngine:
     # -- seen-snapshot freeze (xor arm) ---------------------------------
 
     def freeze_seen_snapshot(
-        self, seen: DataFrame, blocks: DataFrame | None
-    ) -> tuple[DataFrame | None, DataFrame]:
+        self, seen: DataFrame, blocks: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
         """Freeze the full exact seen set into the IMMUTABLE xor-filter
         snapshot tier (operators/xorfilter — Graf & Lemire 2020) and
         reset the mutable bloom blocks to empty, so from here on
@@ -500,16 +445,11 @@ class CrawlEngine:
         filters = build_shard_filters(
             seen.select("url_hash"), n_shards=XOR_SNAPSHOT_SHARDS
         )
-        new_blocks = (
-            build_blocks(seen.select("url_hash").limit(0), self.cfg.bloom)
-            if self.cfg.bloom is not None
-            else None
-        )
+        new_blocks = build_blocks(seen.select("url_hash").limit(0), self.cfg.bloom)
         if self.store.persistent:
             last = self.store.committed_rounds()[-1]
             filters = self.store.write(filters, last, "xor_snapshot")
-            if new_blocks is not None:
-                new_blocks = self.store.write(new_blocks, last, "blocks")
+            new_blocks = self.store.write(new_blocks, last, "blocks")
             info = self.store.round_info(last)
             info["xor_snapshot_round"] = last
             info["xor_snapshot_shards"] = XOR_SNAPSHOT_SHARDS
@@ -517,8 +457,7 @@ class CrawlEngine:
             self._xor_round = last
         else:
             filters = filters.localCheckpoint(eager=True)
-            if new_blocks is not None:
-                new_blocks = new_blocks.localCheckpoint(eager=True)
+            new_blocks = new_blocks.localCheckpoint(eager=True)
         self.xor_filters = filters
         return new_blocks, filters
 
@@ -527,9 +466,9 @@ class CrawlEngine:
     def retract(
         self,
         seen: DataFrame,
-        blocks: DataFrame | None,
+        blocks: DataFrame,
         urls: "list[str] | DataFrame",
-    ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Remove URLs from the seen set mid-crawl so a later round
         re-fetches them. The production trigger is a policy change
         invalidating previously fetched URLs: a robots rule flip, a
@@ -576,23 +515,21 @@ class CrawlEngine:
             new_seen = self.store.read_many(committed, "seen_delta", SEEN_SCHEMA)
         else:
             new_seen = _minus(seen)
-        new_blocks = None
-        if blocks is not None:
-            # the rebuild reads the REWRITTEN deltas (persistent) or the
-            # anti-join (memory), never the pre-compaction files
-            new_blocks = build_blocks(new_seen.select("url_hash"), self.cfg.bloom)
-            if self.store.persistent:
-                new_blocks = self.store.write(new_blocks, committed[-1], "blocks")
-            else:
-                new_blocks = new_blocks.localCheckpoint(eager=True)
+        # the rebuild reads the REWRITTEN deltas (persistent) or the
+        # anti-join (memory), never the pre-compaction files
+        new_blocks = build_blocks(new_seen.select("url_hash"), self.cfg.bloom)
+        if self.store.persistent:
+            new_blocks = self.store.write(new_blocks, committed[-1], "blocks")
+        else:
+            new_blocks = new_blocks.localCheckpoint(eager=True)
         return new_seen, new_blocks, retracted
 
     def retract_for_robots(
         self,
         seen: DataFrame,
-        blocks: DataFrame | None,
+        blocks: DataFrame,
         robots: DataFrame | None = None,
-    ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """The production retraction trigger (the VERDICT r3 scenario):
         a robots.txt rule CHANGE mid-crawl invalidates previously
         fetched URLs. Computes the seen rows that are DISALLOWED under
@@ -622,7 +559,7 @@ class CrawlEngine:
         self,
         frontier: DataFrame,
         seen: DataFrame,
-        blocks: DataFrame | None,
+        blocks: DataFrame,
         start_round: int,
         fetch_seq_offset: int,
         metrics: list[dict],
@@ -642,7 +579,7 @@ class CrawlEngine:
         self,
         frontier: DataFrame,
         seen: DataFrame,
-        blocks: DataFrame | None,
+        blocks: DataFrame,
         start_round: int,
         fetch_seq_offset: int,
         metrics: list[dict],
@@ -784,7 +721,7 @@ class CrawlEngine:
                 obs_via,
                 *[
                     F.count(F.when(F.col("via") == v, 1)).alias(v)
-                    for v in ("exact", "bloom_definite", "bloom_fp")
+                    for v in ("bloom_definite", "bloom_fp")
                 ],
             )
             new_rows = self.store.write(new_rows, round_no, "new_rows")
@@ -834,15 +771,14 @@ class CrawlEngine:
             # jobs (blocks / fetch_log / records / frontier) — per-job
             # fixed latency is the round loop's scaling tax, so walls
             # are overlapped instead of summed.
-            futs = {}
-            if blocks is not None:
-                new_blocks = update_blocks(
-                    blocks, seen_delta.select("url_hash"), cfg.bloom
-                )
-                old_blocks = blocks
-                futs["blocks"] = pool.submit(
+            new_blocks = update_blocks(
+                blocks, seen_delta.select("url_hash"), cfg.bloom
+            )
+            futs = {
+                "blocks": pool.submit(
                     self.store.write, new_blocks, round_no, "blocks"
                 )
+            }
             # status/record counters ride the materialization jobs as
             # Observations — no separate stats job or extra scan
             obs_log = Observation(f"log_{round_no}")
@@ -864,34 +800,11 @@ class CrawlEngine:
             futs["frontier"] = pool.submit(
                 self.store.write, next_frontier, round_no, "frontier"
             )
-            if blocks is not None:
-                blocks = futs["blocks"].result()
-                old_blocks.unpersist()
+            old_blocks, blocks = blocks, futs["blocks"].result()
+            old_blocks.unpersist()
             round_log = futs["fetch_log"].result()
             records = futs["records"].result()
             frontier = futs["frontier"].result()
-
-            if cfg.recrawl_policy is not None:
-                # fold this round's per-host novelty observations into
-                # the policy state (operators/recrawl): both inputs are
-                # the round's ALREADY-MATERIALIZED slim artifacts, the
-                # state is one row per host, and the fold runs once per
-                # round in round order — the sequential semantics the
-                # crawl_ucb_recrawl gate pins. Checkpointed
-                # through the store so resume reattaches it exactly.
-                from ..operators import recrawl as _rc
-
-                obs = _rc.round_observations(round_log, new_rows)
-                prev_state = (
-                    self.policy_state
-                    if self.policy_state is not None
-                    else _rc.empty_state(self.spark)
-                )
-                self.policy_state = self.store.write(
-                    _rc.update_state(prev_state, obs),
-                    round_no,
-                    "policy_state",
-                )
 
             # counters came from the Observations riding the
             # materialization jobs above (round 2 ran a separate
@@ -981,10 +894,6 @@ class CrawlEngine:
                 "fetch_seq_offset": fetch_seq_offset,
                 "metrics": metrics,
             }
-            if cfg.recrawl_policy is not None:
-                # resume reads policy_state only where a manifest says
-                # the round wrote it
-                round_info["policy_state"] = True
             if self._xor_round is not None:
                 # carry the snapshot pointer forward so resume() from
                 # ANY later round reattaches the tier

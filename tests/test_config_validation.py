@@ -38,13 +38,6 @@ def tiny_web(spark):
     return webgen.pages_df(spark, pages), webgen.robots_df(spark, robots)
 
 
-def test_unknown_recrawl_policy_raises(spark, tiny_web):
-    # ses and cusum were policies once; ucb is the only one kept
-    for policy in ("bogus", "ses", "cusum"):
-        with pytest.raises(ValueError, match="recrawl_policy"):
-            CrawlEngine(spark, *tiny_web, CrawlConfig(recrawl_policy=policy))
-
-
 @pytest.mark.parametrize(
     "field, value",
     [
@@ -52,6 +45,7 @@ def test_unknown_recrawl_policy_raises(spark, tiny_web):
         ("fetch_strategy", "broadcst"),
         ("hot_hosts_k", 0),
         ("hot_hosts_k", -1),
+        ("bloom", None),
     ],
 )
 def test_out_of_range_config_raises(spark, tiny_web, field, value):
@@ -108,9 +102,11 @@ def test_resume_from_empty_checkpoint_raises(spark, tiny_web, tmp_path):
         # --sources matches nothing, so a parser that accepted the
         # option would still stop before Spark starts
         (["--fixture", "--recrawl-policy", "ses", "--sources", "no_such_source"],
-         "invalid choice"),
+         "unrecognized arguments"),
         (["--fixture", "--seen-hll-log2m", "6", "--sources", "no_such_source"],
          "unrecognized arguments"),
+        (["--fixture", "--hot-hosts-k", "0", "--sources", "no_such_source"],
+         "--hot-hosts-k must be >= 1"),
     ],
 )
 def test_crawl_main_argument_errors(argv, message, capsys):

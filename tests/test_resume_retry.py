@@ -49,14 +49,26 @@ def _state(res):
     return records, seen, order
 
 
-def test_resume_equals_uninterrupted(spark, small_web, tmp_path_factory):
+@pytest.fixture(scope="module")
+def full_run(spark, small_web, tmp_path_factory):
+    """The uninterrupted crawl the resume tests compare against, run
+    once on a parquet store: (round numbers, _state). Every store
+    gives the same crawl, so the Iceberg tests compare with it too."""
+    pages, seeds, robots = small_web
+    full = CrawlEngine(
+        spark,
+        webgen.pages_df(spark, pages),
+        webgen.robots_df(spark, robots),
+        _cfg(str(tmp_path_factory.mktemp("full"))),
+    ).run(seeds)
+    return [m["round"] for m in full.metrics], _state(full)
+
+
+def test_resume_equals_uninterrupted(spark, small_web, full_run, tmp_path_factory):
     pages, seeds, robots = small_web
     pages_df = webgen.pages_df(spark, pages)
     robots_df = webgen.robots_df(spark, robots)
-
-    full_dir = str(tmp_path_factory.mktemp("full"))
-    full = CrawlEngine(spark, pages_df, robots_df, _cfg(full_dir)).run(seeds)
-    full_state = _state(full)
+    full_rounds, full_state = full_run
 
     cut_dir = str(tmp_path_factory.mktemp("cut"))
     # "crash" after round 2 (loop stops; checkpoint has rounds 0-2)
@@ -67,9 +79,7 @@ def test_resume_equals_uninterrupted(spark, small_web, tmp_path_factory):
 
     resumed = CrawlEngine.resume(spark, pages_df, robots_df, _cfg(cut_dir))
     # resumed result carries rounds 1..N metrics (prefix from manifest)
-    assert [m["round"] for m in resumed.metrics] == [
-        m["round"] for m in full.metrics
-    ]
+    assert [m["round"] for m in resumed.metrics] == full_rounds
     # records/log of rounds 1-2 live in the checkpoint; reconstruct the
     # full view the way a driver would: read all committed round dirs
     import goto_eater_crawler_spark.schema as S
@@ -242,7 +252,9 @@ def test_iceberg_store_v1_mode_crawl_and_resume(spark, small_web):
     )
 
 
-def test_resume_after_seen_compaction(spark, small_web, tmp_path_factory):
+def test_resume_after_seen_compaction(
+    spark, small_web, full_run, tmp_path_factory
+):
     """Table maintenance mid-crawl: compact all committed seen deltas
     into one, then resume — final state must stay byte-identical to an
     uninterrupted run, and the compacted store must hold exactly one
@@ -255,10 +267,7 @@ def test_resume_after_seen_compaction(spark, small_web, tmp_path_factory):
     pages, seeds, robots = small_web
     pages_df = webgen.pages_df(spark, pages)
     robots_df = webgen.robots_df(spark, robots)
-
-    full_dir = str(tmp_path_factory.mktemp("cfull"))
-    full = CrawlEngine(spark, pages_df, robots_df, _cfg(full_dir)).run(seeds)
-    full_state = _state(full)
+    _, full_state = full_run
 
     cut_dir = str(tmp_path_factory.mktemp("ccut"))
     CrawlEngine(spark, pages_df, robots_df, _cfg(cut_dir, max_rounds=2)).run(seeds)
@@ -295,11 +304,12 @@ def test_resume_after_seen_compaction(spark, small_web, tmp_path_factory):
     assert got_records == full_state[0]
 
 
-def test_resume_after_seen_compaction_iceberg_mode(spark, small_web, tmp_path_factory):
+def test_resume_after_seen_compaction_iceberg_mode(spark, small_web, full_run):
     """Catalog-table compaction: fold all seen_delta partitions into
     the latest round, read_many row-identical, resume == uninterrupted
     (v1 session-catalog mode; the v2 path is the same logic through an
-    atomic Iceberg snapshot overwrite)."""
+    atomic Iceberg snapshot overwrite). The uninterrupted run is the
+    parquet one: the store contract makes the two identical."""
     import uuid
 
     from goto_eater_crawler_spark.plans.crawl import SEEN_SCHEMA
@@ -309,12 +319,8 @@ def test_resume_after_seen_compaction_iceberg_mode(spark, small_web, tmp_path_fa
     pages_df = webgen.pages_df(spark, pages)
     robots_df = webgen.robots_df(spark, robots)
 
-    tag = uuid.uuid4().hex[:8]
-    full_prefix = f"iceberg:spark_catalog.default.cc_{tag}_full"
-    cut_prefix = f"iceberg:spark_catalog.default.cc_{tag}_cut"
-
-    full = CrawlEngine(spark, pages_df, robots_df, _cfg(full_prefix)).run(seeds)
-    full_state = _state(full)
+    _, full_state = full_run
+    cut_prefix = f"iceberg:spark_catalog.default.cc_{uuid.uuid4().hex[:8]}_cut"
 
     CrawlEngine(spark, pages_df, robots_df, _cfg(cut_prefix, max_rounds=2)).run(
         seeds

@@ -24,7 +24,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from goto_eater_crawler_spark.operators.recrawl import POLICIES  # noqa: E402
 from goto_eater_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine  # noqa: E402
 from goto_eater_crawler_spark.schema import PAGES_SCHEMA, ROBOTS_SCHEMA  # noqa: E402
 from goto_eater_crawler_spark.session import get_spark  # noqa: E402
@@ -57,11 +56,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--hot-hosts-k", type=int, default=None,
                    help="per-round top-k hot hosts in the metrics via the "
                         "Misra-Gries sketch (bounded memory at any scale)")
-    p.add_argument("--recrawl-policy", default=None, choices=POLICIES,
-                   help="optional per-host recrawl policy "
-                        "(operators/recrawl): a UCB1 bandit score folded "
-                        "into link priorities each round; state "
-                        "checkpoints with the crawl and survives --resume")
     p.add_argument("--retract", default="",
                    help="comma-separated URLs to retract from the seen set "
                         "of an existing checkpoint (requires --checkpoint; "
@@ -75,6 +69,8 @@ def main(argv=None) -> int:
     args = parser.parse_args(argv)
     if args.retract and not args.checkpoint:
         parser.error("--retract requires --checkpoint")
+    if args.hot_hosts_k is not None and args.hot_hosts_k < 1:
+        parser.error(f"--hot-hosts-k must be >= 1, got {args.hot_hosts_k}")
     if not (args.registry or args.fixture) and not (
         args.pages and args.robots and args.seeds
     ):
@@ -129,7 +125,6 @@ def main(argv=None) -> int:
         checkpoint_dir=args.checkpoint,
         allowed_domains=cfg_domains,
         hot_hosts_k=args.hot_hosts_k,
-        recrawl_policy=args.recrawl_policy,
     )
     eng = CrawlEngine(spark, pages, robots, cfg)
     if args.retract:
