@@ -92,7 +92,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         "meta": "link_meta",
                     }
                 )
-                # lineage: the emitting page's url (families stamp it)
+                # lineage: the emitting page's url (batch_extractor stamps it)
                 ldf["url"] = ldf.pop("from_url")
                 ldf["kind"] = "link"
                 # link_canonical/link_host are computed JVM-side in

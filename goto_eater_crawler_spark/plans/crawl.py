@@ -411,9 +411,7 @@ class CrawlEngine:
 
     # -- seen-snapshot freeze (xor arm) ---------------------------------
 
-    def freeze_seen_snapshot(
-        self, seen: DataFrame, blocks: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
+    def freeze_seen_snapshot(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
         """Freeze the full exact seen set into the IMMUTABLE xor-filter
         snapshot tier (operators/xorfilter — Graf & Lemire 2020) and
         reset the mutable bloom blocks to empty, so from here on
@@ -466,7 +464,6 @@ class CrawlEngine:
     def retract(
         self,
         seen: DataFrame,
-        blocks: DataFrame,
         urls: "list[str] | DataFrame",
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Remove URLs from the seen set mid-crawl so a later round
@@ -527,7 +524,6 @@ class CrawlEngine:
     def retract_for_robots(
         self,
         seen: DataFrame,
-        blocks: DataFrame,
         robots: DataFrame | None = None,
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """The production retraction trigger (the VERDICT r3 scenario):
@@ -548,9 +544,7 @@ class CrawlEngine:
         )
         _, disallowed = robots_split(seen_hosted, robots)
         return self.retract(
-            seen,
-            blocks,
-            disallowed.select(F.col("canonical_url").alias("url")),
+            seen, disallowed.select(F.col("canonical_url").alias("url"))
         )
 
     # -- the round loop -------------------------------------------------

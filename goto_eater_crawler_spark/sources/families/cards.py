@@ -29,10 +29,9 @@ import re
 from urllib.parse import urljoin, urlsplit
 from ...functions.urltools import fast_urljoin
 
-import pandas as pd
-
 from ...functions import minihtml
 from ..registry import HOST_INDEX, REGISTRY, SourceSpec, apply_quirks
+from . import batch_extractor
 
 GENRES = ["和食", "洋食", "中華", "居酒屋", "カフェ", "ラーメン", "寿司"]
 
@@ -794,10 +793,11 @@ def _next_links(spec: SourceSpec, url: str, doc: minihtml.Node) -> list[str]:
     return out
 
 
-def _parse_page(spec: SourceSpec, url: str, body: bytes, depth: int, meta: dict):
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    spec = _spec_for(source, url)
     doc = minihtml.parse(body.decode("utf-8"))
     items: list[dict] = []
-    links: list[dict] = []
+    links: list[tuple] = []
     if spec.config.get("detail") and "/detail/" in url:
         item = apply_quirks(_parse_detail(spec, url, doc), spec.quirks)
         if item is not None:
@@ -811,62 +811,23 @@ def _parse_page(spec: SourceSpec, url: str, body: bytes, depth: int, meta: dict)
         if spec.config.get("detail"):
             href = _qa(card, "a", "detail", "href")
             if href:
-                links.append(
-                    {
-                        "url": fast_urljoin(url, href),
-                        "from_url": url,
-                        "source": spec.name,
-                        "parse_family": "cards",
-                        "depth": depth + 1,
-                        "meta": {},
-                    }
-                )
+                links.append((fast_urljoin(url, href), "cards", {}))
             continue
         item = apply_quirks(_parse_card(spec, card, meta), spec.quirks)
         if item is not None:
             items.append(item)
     for nxt in _next_links(spec, url, doc):
-        links.append(
-            {
-                "url": nxt,
-                "from_url": url,
-                "source": spec.name,
-                "parse_family": "cards",
-                "depth": depth + 1,
-                "meta": dict(meta),
-            }
-        )
+        links.append((nxt, "cards", dict(meta)))
     return items, links
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, depth, meta, html in zip(
-        pdf["url"], pdf["source"], pdf["depth"], pdf["meta"], pdf["html"]
-    ):
-        spec = _spec_for(source, url)
-        meta_d = dict(meta) if meta is not None else {}
-        items, out_links = _parse_page(spec, url, bytes(html), int(depth), meta_d)
-        for idx, it in enumerate(items):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-        for l in out_links:
-            l["source"] = source
-            links.append(l)
-    return recs, links
+extract_batch = batch_extractor(parse_page)
 
 
 # ---------------------------------------------------------------------------
 # oracle parser (independent: string-walking, sequential per-source
 # flow like the reference spiders; shares only the spec data)
 # ---------------------------------------------------------------------------
-
-
-def oracle_parse(url: str, body: bytes, meta: dict | None = None):
-    spec = _spec_for(None, url)
-    return oracle_parse_spec(spec, url, body, dict(meta or {}))
 
 
 def _o_between(s: str, start: str, end: str) -> str | None:
@@ -914,9 +875,12 @@ def _o_quirks(item: dict, spec: SourceSpec) -> dict | None:
     return out
 
 
-def oracle_parse_spec(spec: SourceSpec, url: str, body: bytes, meta: dict):
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Independent per-page parse: engine parity is asserted against
-    this by tests/test_registry_parity.py."""
+    this by tests/test_registry_parity.py. The source is resolved from
+    the url's host (registry hosts are unique)."""
+    spec = _spec_for(None, url)
+    meta = dict(meta or {})
     html = body.decode("utf-8")
     cfg = spec.config
     items, links = [], []
@@ -927,7 +891,6 @@ def oracle_parse_spec(spec: SourceSpec, url: str, body: bytes, meta: dict):
 
     sect = _o_between(html, '<h1 class="sect">', "</h1>")
     if sect:
-        meta = dict(meta)
         meta["area_name"] = sect
 
     chunks = html.split('<article class="card">')[1:]

@@ -16,6 +16,8 @@ import re
 
 import pandas as pd
 
+from . import batch_extractor
+
 # dimension: genre code -> label (the J3 code->label dimension join,
 # SURVEY.md §2.3; our own label set, same 1-based indexing contract
 # as fukuoka.py:65's ``genre_list[row[code]]``)
@@ -78,7 +80,7 @@ def seeds(host: str, source: str) -> list[dict]:
     ]
 
 
-def _parse_csv(body: bytes):
+def parse_page(url: str, source: str, body: bytes, meta: dict):
     items = []
     reader = csv.reader(io.StringIO(body.decode("utf-8")))
     header = next(reader)
@@ -98,21 +100,13 @@ def _parse_csv(body: bytes):
                 "genre_name": GENRE_DIM[code - 1],
             }
         )
-    return items
+    return items, []
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, html in zip(pdf["url"], pdf["source"], pdf["html"]):
-        for idx, it in enumerate(_parse_csv(bytes(html))):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-    return recs, links
+extract_batch = batch_extractor(parse_page)
 
 
-def oracle_parse(url: str, body: bytes):
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Independent parse via pandas.read_csv (the reference's own
     reader, fukuoka.py:47-62) rather than the csv module."""
     pdf = pd.read_csv(io.BytesIO(body), dtype={"ジャンルコード": int}).fillna("")

@@ -18,9 +18,8 @@ import re
 from urllib.parse import urljoin
 from ...functions.urltools import fast_urljoin
 
-import pandas as pd
-
 from ..registry import REGISTRY, SourceSpec
+from . import batch_extractor
 
 _DEFAULT = "kagoshima"
 
@@ -119,12 +118,11 @@ def _parse_index(spec: SourceSpec, url: str, html: str):
             continue
         if area_name in cfg["area_list"]:
             links.append(
-                {
-                    "url": fast_urljoin(url, m.group(1)),
-                    "from_url": url,
-                    "parse_family": "excel_html",
-                    "meta": {"area_name": area_name},
-                }
+                (
+                    fast_urljoin(url, m.group(1)),
+                    "excel_html",
+                    {"area_name": area_name},
+                )
             )
         # else: unknown link — pass (kagoshima.py:62-63)
     return [], links
@@ -145,28 +143,15 @@ def _parse_area(spec: SourceSpec, url: str, html: str, meta: dict):
     return items, []
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, depth, meta, html in zip(
-        pdf["url"], pdf["source"], pdf["depth"], pdf["meta"], pdf["html"]
-    ):
-        spec = _spec(source)
-        html_s = bytes(html).decode("utf-8")
-        meta_d = dict(meta) if meta is not None else {}
-        if "second_page" in html_s:
-            items, out_links = _parse_index(spec, url, html_s)
-        else:
-            items, out_links = _parse_area(spec, url, html_s, meta_d)
-        for idx, it in enumerate(items):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-        for l in out_links:
-            l["source"] = source
-            l["depth"] = int(depth) + 1
-            links.append(l)
-    return recs, links
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    spec = _spec(source)
+    html = body.decode("utf-8")
+    if "second_page" in html:
+        return _parse_index(spec, url, html)
+    return _parse_area(spec, url, html, meta)
+
+
+extract_batch = batch_extractor(parse_page)
 
 
 def oracle_parse(url: str, body: bytes, meta: dict | None = None):

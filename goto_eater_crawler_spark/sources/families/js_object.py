@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
+from . import batch_extractor
 
 AREAS = [("sendai", "仙台"), ("osaki", "大崎"), ("ishinomaki", "石巻")]
 GENRES = ["寿司", "居酒屋", "定食", "中華"]
@@ -130,7 +130,7 @@ _MARKER_RE = re.compile(
 )
 
 
-def _parse_body(url: str, body: bytes, meta: dict | None):
+def parse_page(url: str, source: str, body: bytes, meta: dict):
     html = body.decode("utf-8")
     markers = [m.groupdict() for m in _MARKER_RE.finditer(html)]
     items = []
@@ -141,7 +141,7 @@ def _parse_body(url: str, body: bytes, meta: dict | None):
             "address": addr,
             "tel": tel,
             "genre_name": genre,
-            "area_name": (meta or {}).get("area_name"),
+            "area_name": meta.get("area_name"),
         }
         # J2: equi on name + containment on address; first match wins
         match = [
@@ -154,17 +154,7 @@ def _parse_body(url: str, body: bytes, meta: dict | None):
     return items, []
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    metas = pdf["meta"] if "meta" in pdf.columns else [None] * len(pdf)
-    for url, source, meta, html in zip(pdf["url"], pdf["source"], metas, pdf["html"]):
-        items, _ = _parse_body(url, bytes(html), meta)
-        for idx, it in enumerate(items):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-    return recs, links
+extract_batch = batch_extractor(parse_page)
 
 
 def oracle_parse(url: str, body: bytes, meta: dict | None = None):

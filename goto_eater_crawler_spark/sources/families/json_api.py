@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
+from . import batch_extractor
 
 AREAS = ["高知市", "南国市", "土佐市", "須崎市"]
 GENRES = ["和食", "洋食", "中華", "喫茶"]
@@ -75,18 +75,13 @@ def _rows_to_items(rows):
     return items
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, html in zip(pdf["url"], pdf["source"], pdf["html"]):
-        items = _rows_to_items(json.loads(bytes(html)))
-        for idx, it in enumerate(items):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-    return recs, links
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    return _rows_to_items(json.loads(body)), []
 
 
-def oracle_parse(url: str, body: bytes):
+extract_batch = batch_extractor(parse_page)
+
+
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     # mirrors kochi.py:20-47 directly: json.loads(response.body)
     return _rows_to_items(json.loads(body)), []

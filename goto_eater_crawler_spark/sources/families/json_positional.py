@@ -18,9 +18,8 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
-
 from ..registry import REGISTRY, apply_quirks
+from . import batch_extractor
 
 GENRES = ["和食", "洋食", "中華", "居酒屋", "カフェ"]
 AREAS = ["高知市", "南国市", "土佐市"]
@@ -81,31 +80,27 @@ def _quirks_for(source: str):
     return spec.quirks if spec is not None else REGISTRY["kochi"].quirks
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, html in zip(pdf["url"], pdf["source"], pdf["html"]):
-        quirks = _quirks_for(source)
-        idx = 0
-        for row in json.loads(bytes(html).decode("utf-8")):
-            item = {
-                "area_name": row[IDX_AREA_NAME],
-                "genre_name": row[IDX_GENRE_NAME],
-                "shop_name": row[IDX_SHOP_NAME],
-                "address": row[IDX_ADDRESS],
-                "tel": row[IDX_TEL],
-            }
-            item = apply_quirks(item, quirks)
-            if item is None:
-                continue
-            item["url"] = url
-            item["source"] = source
-            item["item_index"] = idx
-            idx += 1
-            recs.append(item)
-    return recs, links
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    quirks = _quirks_for(source)
+    items = []
+    for row in json.loads(body.decode("utf-8")):
+        item = {
+            "area_name": row[IDX_AREA_NAME],
+            "genre_name": row[IDX_GENRE_NAME],
+            "shop_name": row[IDX_SHOP_NAME],
+            "address": row[IDX_ADDRESS],
+            "tel": row[IDX_TEL],
+        }
+        item = apply_quirks(item, quirks)
+        if item is not None:
+            items.append(item)
+    return items, []
 
 
-def oracle_parse(url: str, body: bytes):
+extract_batch = batch_extractor(parse_page)
+
+
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Independent parse mirroring kochi.py:20-46's sequential flow."""
     items = []
     for row in json.loads(body):

@@ -21,8 +21,7 @@ from __future__ import annotations
 import re
 from urllib.parse import urljoin
 from ...functions.urltools import fast_urljoin
-
-import pandas as pd
+from . import batch_extractor
 
 GENRES = ["京料理", "割烹", "焼肉", "イタリアン", "バル"]
 
@@ -146,43 +145,21 @@ def _parse_detail(url: str, html: str) -> dict:
     return item
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, depth, html in zip(
-        pdf["url"], pdf["source"], pdf["depth"], pdf["html"]
-    ):
-        html_s = bytes(html).decode("utf-8")
-        if '<table class="shop">' in html_s:
-            it = _parse_detail(url, html_s)
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = 0
-            recs.append(it)
-        else:
-            for href in _DETAIL_A_RE.findall(html_s):
-                links.append(
-                    {
-                        "url": fast_urljoin(url, href),
-                        "from_url": url,
-                        "source": source,
-                        "parse_family": "label_table",
-                        "depth": int(depth) + 1,
-                        "meta": {},
-                    }
-                )
-            nm = _NEXT_RE.search(html_s)
-            if nm:
-                links.append(
-                    {
-                        "url": fast_urljoin(url, nm.group(1)),
-                        "from_url": url,
-                        "source": source,
-                        "parse_family": "label_table",
-                        "depth": int(depth) + 1,
-                        "meta": {},
-                    }
-                )
-    return recs, links
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    html = body.decode("utf-8")
+    if '<table class="shop">' in html:
+        return [_parse_detail(url, html)], []
+    links = [
+        (fast_urljoin(url, href), "label_table", {})
+        for href in _DETAIL_A_RE.findall(html)
+    ]
+    nm = _NEXT_RE.search(html)
+    if nm:
+        links.append((fast_urljoin(url, nm.group(1)), "label_table", {}))
+    return [], links
+
+
+extract_batch = batch_extractor(parse_page)
 
 
 # ---------------------------------------------------------------------------
@@ -190,12 +167,14 @@ def extract_batch(pdf: pd.DataFrame):
 # ---------------------------------------------------------------------------
 
 
-def oracle_parse(url: str, body: bytes):
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     html = body.decode("utf-8")
     if '<table class="shop">' not in html:
         links = []
         for m in re.finditer(r'<a class="(detail|next)" href="([^"]*)"', html):
-            links.append(urljoin(url, m.group(2)))
+            links.append(
+                {"url": urljoin(url, m.group(2)), "parse_family": "label_table", "meta": {}}
+            )
         return [], links
     # label-keyed lookup, built independently with a th/td scan
     table = {}

@@ -18,9 +18,8 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 from ...functions.urltools import fast_urljoin
+from . import batch_extractor
 
 GENRES = ["和食", "洋食", "中華", "居酒屋", "カフェ", "ラーメン", "寿司"]
 
@@ -112,7 +111,7 @@ _LATLNG_RE = re.compile(r"/maps/.*/@(?P<lat>.*?),(?P<lng>.*?),(?P<zoom>.*)/data"
 _NEXT_RE = re.compile(r'<li class="next"><a href="([^"]*)">')
 
 
-def _parse_body(url: str, body: bytes):
+def parse_page(url: str, source: str, body: bytes, meta: dict):
     """Parse one page -> (item dicts in document order, next links)."""
     html = body.decode("utf-8")
     items = []
@@ -146,37 +145,11 @@ def _parse_body(url: str, body: bytes):
     links = []
     nm = _NEXT_RE.search(html)
     if nm:
-        from urllib.parse import urljoin
-
-        links.append(fast_urljoin(url, nm.group(1)))
+        links.append((fast_urljoin(url, nm.group(1)), "list_xpath", {}))
     return items, links
 
 
-def extract_batch(pdf: pd.DataFrame):
-    """Engine extractor over a pandas batch of (url, source, depth,
-    meta, html). Returns (records, links) pandas frames."""
-    recs, links = [], []
-    for url, source, depth, html in zip(
-        pdf["url"], pdf["source"], pdf["depth"], pdf["html"]
-    ):
-        items, out_links = _parse_body(url, bytes(html))
-        for idx, it in enumerate(items):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-        for l in out_links:
-            links.append(
-                {
-                    "url": l,
-                    "from_url": url,
-                    "source": source,
-                    "parse_family": "list_xpath",
-                    "depth": int(depth) + 1,
-                    "meta": {},
-                }
-            )
-    return recs, links
+extract_batch = batch_extractor(parse_page)
 
 
 # ---------------------------------------------------------------------------
@@ -184,7 +157,7 @@ def extract_batch(pdf: pd.DataFrame):
 # ---------------------------------------------------------------------------
 
 
-def oracle_parse(url: str, body: bytes):
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Single-page oracle parser. Mirrors the *reference spider's*
     flow (tochigi.py:19-70): iterate cards, regex the zip split with
     its fallback branch, extract_first semantics for tel/hp/gmap."""
@@ -222,5 +195,7 @@ def oracle_parse(url: str, body: bytes):
     links = []
     nm = re.search(r'<li class="next"><a href="([^"]*)">', html)
     if nm:
-        links.append(urljoin(url, nm.group(1)))
+        links.append(
+            {"url": urljoin(url, nm.group(1)), "parse_family": "list_xpath", "meta": {}}
+        )
     return items, links

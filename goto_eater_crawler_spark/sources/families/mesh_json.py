@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
+from . import batch_extractor
 
 GENRES = ["佐賀牛", "呼子イカ", "うどん", "カフェ"]
 N_CELLS = 6  # grid cells per fixture host
@@ -132,19 +132,14 @@ def _shops_to_items(shops: list[dict]):
     ]
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, html in zip(pdf["url"], pdf["source"], pdf["html"]):
-        shops = json.loads(bytes(html))["results"]["shop"]
-        for idx, it in enumerate(_shops_to_items(shops)):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-    return recs, links
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    return _shops_to_items(json.loads(body)["results"]["shop"]), []
 
 
-def oracle_parse(url: str, body: bytes):
+extract_batch = batch_extractor(parse_page)
+
+
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     # mirrors abstract_liny.py:49-66: json.loads(response.body) then
     # item per shop dict
     shops = json.loads(body)["results"]["shop"]

@@ -22,9 +22,8 @@ cells correctly.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from ...functions import minipdf
+from . import batch_extractor
 
 GENRES = ["仕出し", "弁当", "料亭", "洋食"]
 HEADER = ["飲食店名", "店舗住所", "店舗電話番号", "URL", "業態"]
@@ -131,18 +130,14 @@ def _tables_to_items(tables: list[list[dict]]):
     return items
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, html in zip(pdf["url"], pdf["source"], pdf["html"]):
-        for idx, it in enumerate(_tables_to_items(decode_pdf_tables(bytes(html)))):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-    return recs, links
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    return _tables_to_items(decode_pdf_tables(body)), []
 
 
-def oracle_parse(url: str, body: bytes):
+extract_batch = batch_extractor(parse_page)
+
+
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Independent pass: sequential scan of stream blocks in document
     byte order (no xref), its own text-op scanner, same cleanup rules
     as tokyo.py:76-93."""

@@ -24,9 +24,8 @@ import hashlib
 import re
 from urllib.parse import urlsplit
 
-import pandas as pd
-
 from ...functions.urltools import fast_urljoin
+from . import batch_extractor
 
 AREAS = [("11", "道央"), ("21", "道南"), ("31", "道北"), ("41", "道東")]
 GENRES = ["海鮮", "ジンギスカン", "ラーメン", "スープカレー"]
@@ -127,13 +126,12 @@ _TR_RE = re.compile(
 _NEXT_RE = re.compile(r'<a class="next" href="([^"]+)">')
 
 
-def _parse_body(url: str, body: bytes, meta: dict | None):
-    """One page -> (items, link dicts). Dispatch on URL path: the form
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    """One page -> (items, links). Dispatch on URL path: the form
     page emits token-carrying search links; result pages emit records
     + a token-carrying next link."""
     html = body.decode("utf-8")
     path = urlsplit(url).path
-    meta = dict(meta or {})
     if path.endswith("/search"):
         tm = _TOKEN_RE.search(html)
         if not tm:
@@ -141,11 +139,11 @@ def _parse_body(url: str, body: bytes, meta: dict | None):
         token = tm.group(1)
         host = urlsplit(url).hostname
         links = [
-            {
-                "url": result_url(host, code, 1, token),
-                "parse_family": "session_token",
-                "meta": {"_token": token, "area_name": label},
-            }
+            (
+                result_url(host, code, 1, token),
+                "session_token",
+                {"_token": token, "area_name": label},
+            )
             for code, label in _OPTION_RE.findall(html)
         ]
         return [], links
@@ -167,42 +165,17 @@ def _parse_body(url: str, body: bytes, meta: dict | None):
     links = []
     nm = _NEXT_RE.search(html)
     if nm:
-        from urllib.parse import urljoin
-
         links.append(
-            {
-                "url": fast_urljoin(url, nm.group(1).replace("&amp;", "&")),
-                "parse_family": "session_token",
-                "meta": meta,  # token + area thread forward
-            }
+            (
+                fast_urljoin(url, nm.group(1).replace("&amp;", "&")),
+                "session_token",
+                meta,  # token + area thread forward
+            )
         )
     return items, links
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    metas = pdf["meta"] if "meta" in pdf.columns else [None] * len(pdf)
-    for url, source, depth, meta, html in zip(
-        pdf["url"], pdf["source"], pdf["depth"], metas, pdf["html"]
-    ):
-        items, out_links = _parse_body(url, bytes(html), meta)
-        for idx, it in enumerate(items):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-        for l in out_links:
-            links.append(
-                {
-                    "url": l["url"],
-                    "from_url": url,
-                    "source": source,
-                    "parse_family": l["parse_family"],
-                    "depth": int(depth) + 1,
-                    "meta": l["meta"],
-                }
-            )
-    return recs, links
+extract_batch = batch_extractor(parse_page)
 
 
 def oracle_parse(url: str, body: bytes, meta: dict | None = None):

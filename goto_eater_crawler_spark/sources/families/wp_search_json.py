@@ -22,7 +22,7 @@ from __future__ import annotations
 import json
 import re
 
-import pandas as pd
+from . import batch_extractor
 
 AREA_LIST = ["村山", "最上", "置賜", "庄内"]
 GENRES = ["そば", "ラーメン", "郷土料理", "フレンチ", "焼鳥"]
@@ -87,7 +87,7 @@ _NEXT_RE = re.compile(r'<a class="next" data-page="(\d+)"')
 _PAGE_PARAM_RE = re.compile(r"([?&])page=\d+")
 
 
-def _parse_payload(url: str, body: bytes):
+def parse_page(url: str, source: str, body: bytes, meta: dict):
     payload = json.loads(body)
     items = []
     for m in _LI_RE.finditer(payload["html"]):
@@ -120,36 +120,15 @@ def _parse_payload(url: str, body: bytes):
     am = _ACTIVE_RE.search(payload["pager"])
     nm = _NEXT_RE.search(payload["pager"])
     if am and nm and am.group(1) != nm.group(1):
-        links.append(_PAGE_PARAM_RE.sub(rf"\g<1>page={nm.group(1)}", url, count=1))
+        nxt = _PAGE_PARAM_RE.sub(rf"\g<1>page={nm.group(1)}", url, count=1)
+        links.append((nxt, "wp_search_json", {}))
     return items, links
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, depth, html in zip(
-        pdf["url"], pdf["source"], pdf["depth"], pdf["html"]
-    ):
-        items, out = _parse_payload(url, bytes(html))
-        for idx, it in enumerate(items):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-        for l in out:
-            links.append(
-                {
-                    "url": l,
-                    "from_url": url,
-                    "source": source,
-                    "parse_family": "wp_search_json",
-                    "depth": int(depth) + 1,
-                    "meta": {},
-                }
-            )
-    return recs, links
+extract_batch = batch_extractor(parse_page)
 
 
-def oracle_parse(url: str, body: bytes):
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Independent re-implementation mirroring yamagata.py flow."""
     payload = json.loads(body)
     items = []
@@ -180,5 +159,6 @@ def oracle_parse(url: str, body: bytes):
     am = re.search(r'<span class="active">(\d+)</span>', payload["pager"])
     nm = re.search(r'<a class="next" data-page="(\d+)"', payload["pager"])
     if am and nm and am.group(1) != nm.group(1):
-        links.append(re.sub(r"([?&])page=\d+", rf"\g<1>page={nm.group(1)}", url, count=1))
+        nxt = re.sub(r"([?&])page=\d+", rf"\g<1>page={nm.group(1)}", url, count=1)
+        links.append({"url": nxt, "parse_family": "wp_search_json", "meta": {}})
     return items, links

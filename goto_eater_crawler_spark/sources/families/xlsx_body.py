@@ -5,12 +5,12 @@ Models goto_eat_scrapy/spiders/nara.py:19-41: the spider downloads an
 ``.xlsx``, reads sheet ``リスト`` with ``pd.read_excel(...,
 sheet_name="リスト", dtype=str)`` and emits one item per row.
 
-This sandbox has no ``openpyxl``/``xlsxwriter``, but XLSX is just a
-zip of XML parts — the fixture writer and both parsers speak the real
-OOXML container directly (``zipfile`` + shared-strings XML), so the
-Spark-side plumbing (binary body -> vectorized batch parse) is real,
-not a stand-in format. If ``openpyxl`` is available the engine parser
-uses it (import-try); otherwise the built-in minimal reader runs.
+XLSX is a zip of XML parts: the fixture writer and both parsers
+speak the real OOXML container directly (``zipfile`` + shared-strings
+XML), with no spreadsheet library, so the Spark-side plumbing (binary
+body -> vectorized batch parse) is real, not a stand-in format. The
+engine always reads cells through :func:`read_xlsx`, which returns
+every cell as a string (``dtype=str``).
 
 Quirks reproduced:
 - ``dtype=str`` semantics: zip codes keep leading zeros, numbers stay
@@ -26,7 +26,7 @@ import io
 import re
 import zipfile
 
-import pandas as pd
+from . import batch_extractor
 
 SHEET_NAME = "リスト"
 HEADERS = ["店舗名", "郵便番号", "住所", "電話番号", "ジャンル"]
@@ -135,9 +135,9 @@ _CELL_RE = re.compile(r'<c r="([A-Z]+)\d+"(?: t="(\w+)")?><v>(.*?)</v></c>')
 
 
 def read_xlsx(body: bytes) -> list[list[str | None]]:
-    """Minimal OOXML reader (dtype=str semantics, nara.py:24). Used by
-    the engine when openpyxl is absent; returns dense rows padded to
-    the max column seen."""
+    """Minimal OOXML reader (dtype=str semantics, nara.py:24), the
+    engine's only XLSX reader; returns dense rows padded to the max
+    column seen."""
     with zipfile.ZipFile(io.BytesIO(body)) as z:
         ss_xml = z.read("xl/sharedStrings.xml").decode("utf-8")
         sheet_xml = z.read("xl/worksheets/sheet1.xml").decode("utf-8")
@@ -200,30 +200,14 @@ def _rows_to_items(rows: list[list[str | None]]):
     return items
 
 
-def extract_batch(pdf: pd.DataFrame):
-    recs, links = [], []
-    for url, source, html in zip(pdf["url"], pdf["source"], pdf["html"]):
-        body = bytes(html)
-        try:  # real library if present; sandbox falls back to built-in
-            import openpyxl  # noqa: F401
-
-            wb = openpyxl.load_workbook(io.BytesIO(body), read_only=True)
-            ws = wb[SHEET_NAME] if SHEET_NAME in wb.sheetnames else wb.active
-            rows = [
-                [None if c is None else str(c) for c in r]
-                for r in ws.iter_rows(values_only=True)
-            ]
-        except ImportError:
-            rows = read_xlsx(body)
-        for idx, it in enumerate(_rows_to_items(rows)):
-            it["url"] = url
-            it["source"] = source
-            it["item_index"] = idx
-            recs.append(it)
-    return recs, links
+def parse_page(url: str, source: str, body: bytes, meta: dict):
+    return _rows_to_items(read_xlsx(body)), []
 
 
-def oracle_parse(url: str, body: bytes):
+extract_batch = batch_extractor(parse_page)
+
+
+def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Independent pass: unzip, map shared strings, walk rows with its
     own (split-based) cell scan — mirrors nara.py:24-41 row handling."""
     with zipfile.ZipFile(io.BytesIO(body)) as z:

@@ -10,7 +10,7 @@ that becomes a VALUES literal for the DuckDB side.
 
 from __future__ import annotations
 
-from .families import FAMILIES, cards
+from .families import FAMILIES
 from .registry import REGISTRY
 
 # families whose fixture sites are single-pass parseable from a
@@ -37,30 +37,13 @@ def corpus_sources() -> list[str]:
 def _site_and_meta(name: str):
     spec = REGISTRY[name]
     fam = FAMILIES[spec.family]
-    if spec.family == "cards":
-        site = cards.gen_site(spec.host, name)
-        seed_rows = cards.seeds(spec.host, name)
-    else:
-        site = fam.gen_site(spec.host)
-        seed_rows = fam.seeds(spec.host, name)
-    metas = {s["url"]: s.get("meta") or {} for s in seed_rows}
+    site = fam.gen_site(spec.host)
+    metas = {s["url"]: s.get("meta") or {} for s in fam.seeds(spec.host, name)}
     # walk pages via the oracle to discover link-carried meta
     for pg in site:
-        meta = metas.get(pg["url"], {})
-        if spec.family == "cards":
-            _, links = cards.oracle_parse_spec(spec, pg["url"], pg["body"], dict(meta))
-        else:
-            import inspect
-
-            if len(inspect.signature(fam.oracle_parse).parameters) >= 3:
-                _, links = fam.oracle_parse(pg["url"], pg["body"], meta)
-            else:
-                _, links = fam.oracle_parse(pg["url"], pg["body"])
+        _, links = fam.oracle_parse(pg["url"], pg["body"], metas.get(pg["url"], {}))
         for l in links:
-            if isinstance(l, dict):
-                metas.setdefault(l["url"], l.get("meta") or {})
-            else:
-                metas.setdefault(l, {})
+            metas.setdefault(l["url"], l["meta"])
     return spec, site, metas
 
 
@@ -105,11 +88,7 @@ def crawl_fixture(source_names: list[str] | None = None):
                     "lang": None,
                 }
             )
-        fam = FAMILIES[spec.family]
-        if spec.family == "cards":
-            seeds.extend(cards.seeds(spec.host, name))
-        else:
-            seeds.extend(fam.seeds(spec.host, name))
+        seeds.extend(FAMILIES[spec.family].seeds(spec.host, name))
         robots.append(
             {
                 "host": spec.host,
@@ -130,19 +109,10 @@ def oracle_source_aggregates() -> list[tuple[str, int, str, str]]:
     out = []
     for name in corpus_sources():
         spec, site, metas = _site_and_meta(name)
+        fam = FAMILIES[spec.family]
         items = []
         for pg in site:
-            meta = dict(metas.get(pg["url"], {}))
-            if spec.family == "cards":
-                its, _ = cards.oracle_parse_spec(spec, pg["url"], pg["body"], meta)
-            else:
-                fam = FAMILIES[spec.family]
-                import inspect
-
-                if len(inspect.signature(fam.oracle_parse).parameters) >= 3:
-                    its, _ = fam.oracle_parse(pg["url"], pg["body"], meta)
-                else:
-                    its, _ = fam.oracle_parse(pg["url"], pg["body"])
+            its, _ = fam.oracle_parse(pg["url"], pg["body"], metas.get(pg["url"]))
             items.extend(normalize_item(dict(i)) for i in its)
         shops = [i["shop_name"] for i in items if i.get("shop_name") is not None]
         addrs = [i["address"] for i in items if i.get("address") is not None]

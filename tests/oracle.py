@@ -14,38 +14,12 @@ from __future__ import annotations
 import math
 from urllib.parse import urlsplit
 
-import inspect
-
 from goto_eater_crawler_spark.functions.textnorm import normalize_item
 from goto_eater_crawler_spark.functions.urltools import canonicalize_url, url_host
 from goto_eater_crawler_spark.schema import FEED_EXPORT_FIELDS
 from goto_eater_crawler_spark.sources.families import FAMILIES
 
 DEFAULT_DELAY = 3.0
-
-
-def oracle_parse_page(family: str, url: str, body: bytes, meta: dict | None):
-    """Call a family's oracle_parse, passing meta when it takes it.
-    Normalizes links to dicts {url, parse_family, meta} (plain-string
-    links inherit the emitting row's family and empty meta)."""
-    fam = FAMILIES[family]
-    if len(inspect.signature(fam.oracle_parse).parameters) >= 3:
-        items, links = fam.oracle_parse(url, body, meta)
-    else:
-        items, links = fam.oracle_parse(url, body)
-    norm_links = []
-    for l in links:
-        if isinstance(l, str):
-            norm_links.append({"url": l, "parse_family": family, "meta": {}})
-        else:
-            norm_links.append(
-                {
-                    "url": l["url"],
-                    "parse_family": l.get("parse_family", family),
-                    "meta": l.get("meta") or {},
-                }
-            )
-    return items, norm_links
 
 
 def _priority(depth: int) -> float:
@@ -155,8 +129,8 @@ def crawl_oracle(
                 continue
             fetch_order.append(row["canonical_url"])
             log.append({"round": round_no, "status": "fetched", "url": row["canonical_url"]})
-            items, links = oracle_parse_page(
-                row["parse_family"], row["canonical_url"], body, row.get("meta")
+            items, links = FAMILIES[row["parse_family"]].oracle_parse(
+                row["canonical_url"], body, row.get("meta")
             )
             for idx, item in enumerate(items):
                 full = {f: item.get(f) for f in FEED_EXPORT_FIELDS}

@@ -3,6 +3,8 @@ independent oracle parser) — pure pandas, no Spark session needed."""
 
 from __future__ import annotations
 
+import inspect
+
 import pandas as pd
 import pytest
 
@@ -14,8 +16,6 @@ def test_engine_oracle_parity(family):
     """Walk the fixture site page-by-page, threading link meta forward
     (token/area families need it); engine batch extractor must agree
     with the independent oracle parser on every page."""
-    from tests.oracle import oracle_parse_page
-
     fam = FAMILIES[family]
     host = f"{family.replace('_', '-')}.example.jp"
     site = fam.gen_site(host)
@@ -36,7 +36,7 @@ def test_engine_oracle_parity(family):
             ]
         )
         recs, links = fam.extract_batch(pdf)
-        o_items, o_links = oracle_parse_page(family, pg["url"], pg["body"], meta)
+        o_items, o_links = fam.oracle_parse(pg["url"], pg["body"], meta)
         stripped = [
             {k: v for k, v in r.items() if k not in ("url", "source", "item_index")}
             for r in recs
@@ -52,6 +52,34 @@ def test_engine_oracle_parity(family):
         assert [r["item_index"] for r in recs] == list(range(len(recs)))
         total_items += len(recs)
     assert total_items > 0
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_family_contract(family):
+    """Every family has the same contract: ``oracle_parse(url, body,
+    meta=None)`` with ``{url, parse_family, meta}`` link dicts, and an
+    ``extract_batch`` from the shared loop that treats a batch without
+    a ``meta`` column like one of empty (or null) meta values."""
+    fam = FAMILIES[family]
+    params = inspect.signature(fam.oracle_parse).parameters
+    assert list(params) == ["url", "body", "meta"]
+    assert params["meta"].default is None
+    assert fam.extract_batch.__qualname__ == "batch_extractor.<locals>.extract_batch"
+
+    host = f"{family.replace('_', '-')}.example.jp"
+    site = fam.gen_site(host)
+    metas = {s["url"]: s.get("meta") or {} for s in fam.seeds(host, "s")}
+    for pg in site:
+        _, links = fam.oracle_parse(pg["url"], pg["body"], metas.get(pg["url"]))
+        for l in links:
+            assert isinstance(l, dict) and set(l) == {"url", "parse_family", "meta"}
+            assert isinstance(l["meta"], dict)
+            metas.setdefault(l["url"], l["meta"])
+
+    row = {"url": site[0]["url"], "source": "s", "depth": 0, "html": site[0]["body"]}
+    no_meta = fam.extract_batch(pd.DataFrame([row]))
+    assert no_meta == fam.extract_batch(pd.DataFrame([{**row, "meta": {}}]))
+    assert no_meta == fam.extract_batch(pd.DataFrame([{**row, "meta": None}]))
 
 
 def test_fixture_determinism():

@@ -150,15 +150,13 @@ def test_engine_extracts_same_items_from_hostile_markup(name):
             for s in cards.seeds(spec.host, name):
                 if s["url"] == pg["url"]:
                     meta = s["meta"]
-        base_items, base_links = cards._parse_page(
-            spec, pg["url"], pg["body"], 0, dict(meta)
+        base_items, base_links = cards.parse_page(
+            pg["url"], name, pg["body"], dict(meta)
         )
         hostile = _perturb(pg["body"].decode("utf-8")).encode("utf-8")
-        h_items, h_links = cards._parse_page(
-            spec, pg["url"], hostile, 0, dict(meta)
-        )
+        h_items, h_links = cards.parse_page(pg["url"], name, hostile, dict(meta))
         assert h_items == base_items, (name, pg["url"])
-        assert [l["url"] for l in h_links] == [l["url"] for l in base_links]
+        assert [l[0] for l in h_links] == [l[0] for l in base_links]
         n_items += len(base_items)
     assert n_items > 0  # non-vacuous
 

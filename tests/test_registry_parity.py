@@ -39,34 +39,18 @@ def _walk_parity(spec, site, seed_rows):
             ]
         )
         recs, links = fam.extract_batch(pdf)
-        if spec.family == "cards":
-            o_items, o_links = cards.oracle_parse_spec(
-                spec, pg["url"], pg["body"], dict(meta)
-            )
-        elif hasattr(fam.oracle_parse, "__call__"):
-            import inspect
-
-            if len(inspect.signature(fam.oracle_parse).parameters) >= 3:
-                o_items, o_links = fam.oracle_parse(pg["url"], pg["body"], meta)
-            else:
-                o_items, o_links = fam.oracle_parse(pg["url"], pg["body"])
+        o_items, o_links = fam.oracle_parse(pg["url"], pg["body"], meta)
         stripped = [
             {k: v for k, v in r.items() if k not in ("url", "source", "item_index")}
             for r in recs
         ]
         assert stripped == o_items, (spec.name, pg["url"])
-        # some family oracles emit plain-string links (the generic
-        # dispatch normalizes them the same way)
-        o_norm = [
-            l if isinstance(l, dict) else {"url": l, "meta": {}}
-            for l in o_links
-        ]
-        assert [l["url"] for l in links] == [l["url"] for l in o_norm], (
+        assert [l["url"] for l in links] == [l["url"] for l in o_links], (
             spec.name,
             pg["url"],
         )
-        for l in o_norm:
-            metas.setdefault(l["url"], l.get("meta") or {})
+        for l in o_links:
+            metas.setdefault(l["url"], l["meta"])
         total += len(recs)
     return total
 
@@ -280,7 +264,7 @@ def _all_items(name):
             for s in cards.seeds(spec.host, name):
                 if s["url"] == pg["url"]:
                     meta = s["meta"]
-        its, _ = cards.oracle_parse_spec(spec, pg["url"], pg["body"], meta)
+        its, _ = cards.oracle_parse(pg["url"], pg["body"], meta)
         items.extend(its)
     return items
 

@@ -199,7 +199,7 @@ def test_resume_with_round_capacity(spark, small_web, tmp_path_factory):
     assert got[2] == full_state[2]
 
 
-def test_iceberg_store_v1_mode_crawl_and_resume(spark, small_web):
+def test_iceberg_store_v1_mode_crawl_and_resume(spark, small_web, full_run):
     """IcebergStore's table-catalog logic executes end-to-end in v1
     session-catalog mode (round-2 verdict: the overwritePartitions
     path had never run). Same store class, same table naming, same
@@ -207,7 +207,8 @@ def test_iceberg_store_v1_mode_crawl_and_resume(spark, small_web):
     the only v2-specific lines are the writeTo() calls themselves,
     swapped for their exact v1 semantic equivalent (dynamic INSERT
     OVERWRITE). A crash-resume through catalog tables must equal the
-    uninterrupted run."""
+    uninterrupted run (the shared parquet one: the store contract makes
+    the two identical)."""
     import uuid
 
     from goto_eater_crawler_spark.plans.store import IcebergStore
@@ -216,14 +217,8 @@ def test_iceberg_store_v1_mode_crawl_and_resume(spark, small_web):
     pages_df = webgen.pages_df(spark, pages)
     robots_df = webgen.robots_df(spark, robots)
 
-    tag = uuid.uuid4().hex[:8]
-    full_prefix = f"iceberg:spark_catalog.default.crawl_{tag}_full"
-    cut_prefix = f"iceberg:spark_catalog.default.crawl_{tag}_cut"
-
-    full = CrawlEngine(
-        spark, pages_df, robots_df, _cfg(full_prefix)
-    ).run(seeds)
-    full_state = _state(full)
+    full_rounds, full_state = full_run
+    cut_prefix = f"iceberg:spark_catalog.default.crawl_{uuid.uuid4().hex[:8]}_cut"
 
     partial = CrawlEngine(
         spark, pages_df, robots_df, _cfg(cut_prefix, max_rounds=2)
@@ -242,9 +237,7 @@ def test_iceberg_store_v1_mode_crawl_and_resume(spark, small_web):
     assert store.read(2, "frontier", S.FRONTIER_SCHEMA).count() == n_before
 
     resumed = CrawlEngine.resume(spark, pages_df, robots_df, _cfg(cut_prefix))
-    assert [m["round"] for m in resumed.metrics] == [
-        m["round"] for m in full.metrics
-    ]
+    assert [m["round"] for m in resumed.metrics] == full_rounds
     assert {r["canonical_url"] for r in resumed.seen.collect()} == full_state[1]
     # committed_rounds reflects the append-only manifest
     assert store.committed_rounds() == list(

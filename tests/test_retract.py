@@ -66,7 +66,7 @@ def test_crawl_retraction_refetches_only_retracted_url(crawled):
     } == {l_url}
 
     # retract D, re-seed L: exactly {L, D} fetched
-    seen2, blocks2, retracted = eng.retract(res1.seen, res1.blocks, [d_url])
+    seen2, blocks2, retracted = eng.retract(res1.seen, [d_url])
     assert [r["canonical_url"] for r in retracted.collect()] == [d_url]
     assert seen2.filter(F.col("canonical_url") == d_url).isEmpty()
     res2 = eng.run_rounds(eng.seed_frontier([seed]), seen2, blocks2)
@@ -124,9 +124,7 @@ def test_robots_change_retraction_with_rebuild(spark, crawled):
         for r in robots
     ]
     seen2, blocks2, retracted = eng.retract_for_robots(
-        res1.seen,
-        res1.blocks,
-        webgen.robots_df(spark, new_robots),
+        res1.seen, webgen.robots_df(spark, new_robots)
     )
     assert {r["canonical_url"] for r in retracted.collect()} == expected
     survivors = {r["canonical_url"] for r in seen2.collect()}
@@ -173,7 +171,7 @@ def test_retraction_persists_through_checkpoint_store(spark, tmp_path):
     d_url = min(r["canonical_url"] for r in res1.seen.collect())
     n_before = res1.seen.count()
 
-    seen2, blocks2, _ = eng.retract(res1.seen, res1.blocks, [d_url])
+    seen2, blocks2, _ = eng.retract(res1.seen, [d_url])
 
     # stored state (what resume() reads) reflects the retraction
     committed = eng.store.committed_rounds()

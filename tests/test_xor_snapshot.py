@@ -74,7 +74,7 @@ def test_freeze_midcrawl_resume_equals_uninterrupted(
     assert len(partial.metrics) == 2  # genuinely mid-crawl
 
     # maintenance window: freeze the seen set into the xor tier
-    blocks2, filters = eng.freeze_seen_snapshot(partial.seen, partial.blocks)
+    blocks2, filters = eng.freeze_seen_snapshot(partial.seen)
     assert filters.count() > 0
     assert blocks2 is not None
     # the mutable arm was RESET: no block carries any set bit
@@ -129,7 +129,7 @@ def test_snapshot_alone_drops_pre_freeze_seen(spark):
         CrawlConfig(round_budget=1e6, max_rounds=8),
     )
     res1 = eng.run(seeds)
-    blocks2, _ = eng.freeze_seen_snapshot(res1.seen, res1.blocks)
+    blocks2, _ = eng.freeze_seen_snapshot(res1.seen)
 
     host = "list-a.example.jp"
     seed = next(s for s in seeds if host in s["url"])
@@ -160,7 +160,7 @@ def test_retract_after_freeze_refetches_without_rebuild(spark):
         CrawlConfig(round_budget=1e6, max_rounds=8),
     )
     res1 = eng.run(seeds)
-    blocks2, _ = eng.freeze_seen_snapshot(res1.seen, res1.blocks)
+    blocks2, _ = eng.freeze_seen_snapshot(res1.seen)
 
     host = "list-a.example.jp"
     seed = next(s for s in seeds if host in s["url"])
@@ -176,7 +176,7 @@ def test_retract_after_freeze_refetches_without_rebuild(spark):
         if r["host"] == host and r["depth"] == 0
     )
 
-    seen2, blocks3, retracted = eng.retract(res1.seen, blocks2, [d_url])
+    seen2, blocks3, retracted = eng.retract(res1.seen, [d_url])
     assert [r["canonical_url"] for r in retracted.collect()] == [d_url]
     assert seen2.filter(F.col("canonical_url") == d_url).isEmpty()
 

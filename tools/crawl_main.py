@@ -133,16 +133,12 @@ def main(argv=None) -> int:
         # a subsequent --resume (this invocation or a later one) can
         # re-discover and re-fetch the URLs.
         from goto_eater_crawler_spark.plans.crawl import SEEN_SCHEMA
-        from goto_eater_crawler_spark.schema import BLOOM_BLOCK_SCHEMA
 
         committed = eng.store.committed_rounds()
         if not committed:
             parser.error("--retract needs an existing committed checkpoint")
         seen = eng.store.read_many(committed, "seen_delta", SEEN_SCHEMA)
-        blocks = eng.store.read(committed[-1], "blocks", BLOOM_BLOCK_SCHEMA)
-        _, _, retracted = eng.retract(
-            seen, blocks, args.retract.split(",")
-        )
+        _, _, retracted = eng.retract(seen, args.retract.split(","))
         print(json.dumps({"retracted": retracted.count()}))
         if not args.resume:
             # maintenance-only invocation: the checkpoint is rewritten;
