@@ -16,7 +16,8 @@ round, so the engine uses the north_rule design:
 - bloom verdict "maybe seen" is confirmed against the **exact seen
   table** (canonical_url) with a left-anti join — so false positives
   can never drop a genuinely-new URL: the bloom accelerates, the exact
-  table decides. FP count is surfaced as a lineage counter.
+  table decides (also for a frozen xor tier's positives, which join
+  the bloom's maybe-set). FP count is surfaced as a lineage counter.
 
 Sizing at 10^10 keys: bits = 10 bits/key -> 12.5 GB total, e.g.
 n_blocks = 4096 x 3 MB blocks; blocks live in the checkpoint table and
@@ -145,9 +146,7 @@ def bloom_maybe_hashes(
     block's candidate hashes — the bitmap is never replicated per row.
     """
     def check(cand: pd.DataFrame, blk: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return pd.DataFrame({"url_hash": pd.Series([], dtype="int64")})
-        if blk.empty:
+        if cand.empty or blk.empty:
             return pd.DataFrame({"url_hash": pd.Series([], dtype="int64")})
         bitmap = np.frombuffer(blk["bits"].iloc[0], dtype=np.uint8)
         hashes = cand["url_hash"].to_numpy()
@@ -164,29 +163,37 @@ def bloom_maybe_hashes(
     )
 
 
+def confirm_split(
+    candidates: DataFrame, maybe: DataFrame, exact_seen: DataFrame, label: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The one filter-then-confirm split of ``candidates``, given the
+    ``url_hash`` rows the filters flag as ``maybe`` seen. Returns
+    (new_rows, definite_new, fp_new): unflagged rows skip the exact
+    check (``via = <label>_definite``); flagged rows the exact seen
+    table proves new are filter false positives (``<label>_fp``)."""
+    definite_new = candidates.join(maybe, "url_hash", "left_anti").withColumn(
+        "via", F.lit(f"{label}_definite")
+    )
+    maybe_rows = candidates.join(maybe, "url_hash", "left_semi")
+    fp_new = maybe_rows.join(
+        exact_seen.select("canonical_url"), "canonical_url", "left_anti"
+    ).withColumn("via", F.lit(f"{label}_fp"))
+    return definite_new.unionByName(fp_new), definite_new, fp_new
+
+
 def split_new_urls(
     candidates: DataFrame,
     blocks: DataFrame,
     exact_seen: DataFrame,
     params: BloomParams,
+    frozen_maybe: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Return (new_rows, definite_new, fp_confirm_checked).
-
-    - ``new_rows``: candidate rows NOT in the seen set (exact
-      semantics — bloom only accelerates), each with a ``via`` column
-      naming the path that admitted it: ``bloom_definite`` or
-      ``bloom_fp``.
-    - ``definite_new``: the subset the bloom proved new, which skipped
-      the exact check — for counters.
-    - ``fp_confirm_checked``: maybe-seen rows that the exact table
-      proved new (= bloom false positives) — for the FP counter.
-    """
+    """:func:`confirm_split` with the bloom's maybe-set, ``via``
+    ``bloom_definite`` / ``bloom_fp``. ``frozen_maybe`` (the xor tier's
+    positives after ``CrawlEngine.freeze_seen_snapshot``) joins that
+    maybe-set, so one exact confirm decides for both tiers; after a
+    freeze ``bloom_fp`` counts either tier's false positives."""
     maybe = bloom_maybe_hashes(candidates, blocks, params)
-    definite_new = candidates.join(maybe, "url_hash", "left_anti").withColumn(
-        "via", F.lit("bloom_definite")
-    )
-    maybe_rows = candidates.join(maybe, "url_hash", "left_semi")
-    fp_new = maybe_rows.join(
-        exact_seen.select("canonical_url"), "canonical_url", "left_anti"
-    ).withColumn("via", F.lit("bloom_fp"))
-    return definite_new.unionByName(fp_new), definite_new, fp_new
+    if frozen_maybe is not None:
+        maybe = maybe.unionByName(frozen_maybe)
+    return confirm_split(candidates, maybe, exact_seen, "bloom")

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import confirm_split
+
 _M64 = (1 << 64) - 1
 
 
@@ -212,28 +214,14 @@ def xor_maybe_hashes(
 
 def split_new_urls_xor(
     candidates: DataFrame,
-    filters: DataFrame | None,
+    filters: DataFrame,
     exact_seen: DataFrame,
     n_shards: int = 8,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Same contract as dedup.split_new_urls:
-    (new_rows, definite_new, fp_confirm_checked) — exact semantics,
-    the filter only accelerates. Probe-negatives are definitely new
+    """Xor-only split, same contract as dedup.split_new_urls:
+    (new_rows, definite_new, fp_confirm_checked) with ``via``
+    ``xor_definite`` / ``xor_fp``. Probe-negatives are definitely new
     (xor filters have no false negatives); probe-positives are
     confirmed against the exact seen table."""
-    if filters is None:
-        new_rows = candidates.join(
-            exact_seen.select("canonical_url"), "canonical_url", "left_anti"
-        ).withColumn("via", F.lit("exact"))
-        empty = new_rows.limit(0)
-        return new_rows, empty, empty
-
     maybe = xor_maybe_hashes(candidates, filters, n_shards)
-    definite_new = candidates.join(maybe, "url_hash", "left_anti").withColumn(
-        "via", F.lit("xor_definite")
-    )
-    maybe_rows = candidates.join(maybe, "url_hash", "left_semi")
-    fp_new = maybe_rows.join(
-        exact_seen.select("canonical_url"), "canonical_url", "left_anti"
-    ).withColumn("via", F.lit("xor_fp"))
-    return definite_new.unionByName(fp_new), definite_new, fp_new
+    return confirm_split(candidates, maybe, exact_seen, "xor")

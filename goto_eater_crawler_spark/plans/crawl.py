@@ -47,7 +47,6 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,6 +63,7 @@ from ..operators.politeness import (
     robots_split,
     with_crawl_delay,
 )
+from ..operators.xorfilter import build_shard_filters, xor_maybe_hashes
 from ..schema import (
     BLOOM_BLOCK_SCHEMA,
     FEED_EXPORT_FIELDS,
@@ -422,12 +422,14 @@ class CrawlEngine:
         false negatives), while the per-round filter state stays
         O(new URLs since last freeze).
 
-        Exactness is preserved by construction: the round loop drops a
-        candidate via the snapshot only when the xor probe is positive
-        AND the exact seen table confirms it — so a later ``retract``
-        needs no snapshot rebuild (the retracted row leaves the exact
-        table; its lingering xor fingerprint degrades into an ordinary
-        false positive that the confirm rescues).
+        Exactness is preserved by construction: the round loop adds the
+        xor probe's positives to the bloom's maybe-set, and the one
+        exact confirm of ``split_new_urls`` decides — so a later
+        ``retract`` needs no snapshot rebuild (the retracted row leaves
+        the exact table; its lingering xor fingerprint degrades into an
+        ordinary false positive that the confirm rescues). After a
+        freeze the ``bloom_fp`` metric counts either tier's false
+        positives.
 
         Persistent stores get the blobs as a ``xor_snapshot`` table
         under the last committed round plus manifest metadata, so
@@ -438,8 +440,6 @@ class CrawlEngine:
         snapshot blobs; continue with ``run_rounds(frontier, seen,
         blocks')``.
         """
-        from ..operators.xorfilter import build_shard_filters
-
         filters = build_shard_filters(
             seen.select("url_hash"), n_shards=XOR_SNAPSHOT_SHARDS
         )
@@ -666,44 +666,16 @@ class CrawlEngine:
                 .drop("_rn")
                 .select(*FRONTIER_COLS)
             )
-            obs_xor = None
-            if self.xor_filters is not None:
-                # tier-1: the frozen xor snapshot. A candidate is
-                # dropped here only when the probe is positive AND the
-                # exact table confirms it (no false negatives, so the
-                # historical seen mass never reaches the mutable arm;
-                # fp rate ~2^-8 means the exact confirm touches only
-                # true-seen + a sliver). Everything surviving goes to
-                # the mutable arm, which post-freeze holds only the
-                # delta keys.
-                from ..operators.xorfilter import xor_maybe_hashes
-
-                maybe = xor_maybe_hashes(
-                    links_dedup, self.xor_filters, XOR_SNAPSHOT_SHARDS
-                )
-                snap_seen = (
-                    links_dedup.join(maybe, "url_hash", "left_semi")
-                    .join(seen.select("canonical_url"), "canonical_url", "left_semi")
-                    .select("canonical_url")
-                    .withColumn("_snap", F.lit(1))
-                )
-                # left join + flag filter (not an anti join) so the
-                # drop-count Observation rides the MAIN probe path —
-                # CollectMetrics under a BroadcastExchange subtree is
-                # never reported back. links_dedup and snap_seen are
-                # both unique per canonical_url: no row multiplication.
-                flagged = links_dedup.join(snap_seen, "canonical_url", "left")
-                obs_xor = Observation(f"xor_{round_no}")
-                flagged = flagged.observe(
-                    obs_xor,
-                    F.sum(F.coalesce(F.col("_snap"), F.lit(0))).alias("dropped"),
-                )
-                links_for_split = flagged.filter(
-                    F.col("_snap").isNull()
-                ).drop("_snap")
-            else:
-                links_for_split = links_dedup
-            new_rows, _, _ = split_new_urls(links_for_split, blocks, seen, cfg.bloom)
+            # the frozen xor tier only adds positives to the bloom's
+            # maybe-set: one exact confirm decides for both tiers
+            frozen_maybe = (
+                xor_maybe_hashes(links_dedup, self.xor_filters, XOR_SNAPSHOT_SHARDS)
+                if self.xor_filters is not None
+                else None
+            )
+            new_rows, _, _ = split_new_urls(
+                links_dedup, blocks, seen, cfg.bloom, frozen_maybe
+            )
             # materialize ONCE; this is the round's heavy job — it
             # computes the whole selected->fetch->extract->dedup chain
             # (upstream persists fill here); everything below reads
@@ -840,25 +812,6 @@ class CrawlEngine:
             if hot_hosts is not None:
                 m["hot_hosts"] = hot_hosts
                 m["hot_hosts_max_err"] = hot_hosts_err
-            if obs_xor is not None:
-                # tier-1 snapshot drops (rode the new_rows job as an
-                # Observation like the via counters; sum is NULL on an
-                # empty link set). Unlike obs_via — observed at the
-                # job's materialized ROOT — this node sits mid-plan,
-                # and AQE's empty-relation propagation folds it away
-                # entirely when the round produced no candidate links:
-                # the JVM then hands back an empty metrics row and
-                # toPyRow fails its schema assertion. Only an empty
-                # input is folded, so the true count is 0.
-                try:
-                    dropped = obs_xor.get["dropped"]
-                except Py4JJavaError as e:
-                    if e.java_exception.getClass().getName() != (
-                        "java.lang.AssertionError"
-                    ):
-                        raise
-                    dropped = 0
-                m["xor_snapshot_dropped"] = int(dropped or 0)
             fetch_seq_offset += m["fetched"]
 
             if self.store.persistent:

@@ -30,22 +30,10 @@ from urllib.parse import urljoin, urlsplit
 from ...functions.urltools import fast_urljoin
 
 from ...functions import minihtml
-from ..registry import HOST_INDEX, REGISTRY, SourceSpec, apply_quirks
+from ..registry import SourceSpec, apply_quirks, spec_for
 from . import batch_extractor
 
 GENRES = ["和食", "洋食", "中華", "居酒屋", "カフェ", "ラーメン", "寿司"]
-
-_DEFAULT = "aichi"  # representative spec for spec-less callers
-
-
-def _spec_for(source: str | None, url: str | None = None) -> SourceSpec:
-    if source and source in REGISTRY:
-        return REGISTRY[source]
-    if url:
-        host = urlsplit(url).hostname or ""
-        if host in HOST_INDEX:
-            return HOST_INDEX[host]
-    return REGISTRY[_DEFAULT]
 
 
 # ---------------------------------------------------------------------------
@@ -360,7 +348,7 @@ def _areas(spec: SourceSpec) -> tuple[str, ...]:
 def gen_site(host: str, source: str | None = None) -> list[dict]:
     """Deterministic fixture site for a registry source (resolved by
     host when source is not given)."""
-    spec = _spec_for(source, f"https://{host}/")
+    spec = spec_for(source, f"https://{host}/")
     cfg = spec.config
     pag = cfg.get("pagination", "next")
     pages: list[dict] = []
@@ -435,7 +423,7 @@ def gen_site(host: str, source: str | None = None) -> list[dict]:
 
 
 def seeds(host: str, source: str | None = None) -> list[dict]:
-    spec = _spec_for(source, f"https://{host}/")
+    spec = spec_for(source, f"https://{host}/")
     src = source or spec.name
     pag = spec.config.get("pagination", "next")
     if pag == "areas":
@@ -794,7 +782,7 @@ def _next_links(spec: SourceSpec, url: str, doc: minihtml.Node) -> list[str]:
 
 
 def parse_page(url: str, source: str, body: bytes, meta: dict):
-    spec = _spec_for(source, url)
+    spec = spec_for(source, url)
     doc = minihtml.parse(body.decode("utf-8"))
     items: list[dict] = []
     links: list[tuple] = []
@@ -879,7 +867,7 @@ def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Independent per-page parse: engine parity is asserted against
     this by tests/test_registry_parity.py. The source is resolved from
     the url's host (registry hosts are unique)."""
-    spec = _spec_for(None, url)
+    spec = spec_for(None, url)
     meta = dict(meta or {})
     html = body.decode("utf-8")
     cfg = spec.config

@@ -18,14 +18,8 @@ import re
 from urllib.parse import urljoin
 from ...functions.urltools import fast_urljoin
 
-from ..registry import REGISTRY, SourceSpec
+from ..registry import SourceSpec, spec_for
 from . import batch_extractor
-
-_DEFAULT = "kagoshima"
-
-
-def _spec(source: str | None) -> SourceSpec:
-    return REGISTRY.get(source or _DEFAULT, REGISTRY[_DEFAULT])
 
 
 def index_url(host: str) -> str:
@@ -37,7 +31,7 @@ def area_url(host: str, a_idx: int) -> str:
 
 
 def gen_site(host: str, source: str | None = None, rows_per_area: int = 6) -> list[dict]:
-    spec = _spec(source)
+    spec = spec_for(source, index_url(host))
     cfg = spec.config
     allow = cfg["area_list"]
     deny = cfg["not_target_area_list"]
@@ -144,7 +138,7 @@ def _parse_area(spec: SourceSpec, url: str, html: str, meta: dict):
 
 
 def parse_page(url: str, source: str, body: bytes, meta: dict):
-    spec = _spec(source)
+    spec = spec_for(source, url)
     html = body.decode("utf-8")
     if "second_page" in html:
         return _parse_index(spec, url, html)
@@ -156,7 +150,7 @@ extract_batch = batch_extractor(parse_page)
 
 def oracle_parse(url: str, body: bytes, meta: dict | None = None):
     """Independent parse mirroring kagoshima.py's two callbacks."""
-    spec = _spec(None)
+    spec = spec_for(None, url)
     cfg = spec.config
     html = body.decode("utf-8")
     meta = dict(meta or {})

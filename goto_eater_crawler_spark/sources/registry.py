@@ -518,6 +518,17 @@ REGISTRY: dict[str, SourceSpec] = dict(_R)
 HOST_INDEX: dict[str, SourceSpec] = {s.host: s for s in REGISTRY.values()}
 
 
+def spec_for(source: str | None, url: str | None = None) -> SourceSpec:
+    """The spec of a registered ``source``, else of the registered host
+    of ``url``; anything else is an error, never a default layout."""
+    if source in REGISTRY:
+        return REGISTRY[source]
+    host = urlsplit(url).hostname if url else None
+    if host in HOST_INDEX:
+        return HOST_INDEX[host]
+    raise ValueError(f"unknown source {source!r} and host {host!r}")
+
+
 def active_sources() -> list[str]:
     """main.py:25-77 semantics: the all-sources run minus ignores."""
     return sorted(n for n, s in REGISTRY.items() if not s.ignored)

@@ -9,6 +9,18 @@ import pandas as pd
 import pytest
 
 from goto_eater_crawler_spark.sources.families import FAMILIES
+from goto_eater_crawler_spark.sources.registry import REGISTRY
+
+# families whose layout comes from a registry spec crawl a registered
+# (source, host); the rest take any source on a per-family host
+REGISTERED = {"cards": "aichi", "excel_html": "kagoshima"}
+
+
+def _source_host(family: str) -> tuple[str, str]:
+    if family in REGISTERED:
+        source = REGISTERED[family]
+        return source, REGISTRY[source].host
+    return "s", f"{family.replace('_', '-')}.example.jp"
 
 
 @pytest.mark.parametrize("family", sorted(FAMILIES))
@@ -17,10 +29,10 @@ def test_engine_oracle_parity(family):
     (token/area families need it); engine batch extractor must agree
     with the independent oracle parser on every page."""
     fam = FAMILIES[family]
-    host = f"{family.replace('_', '-')}.example.jp"
+    source, host = _source_host(family)
     site = fam.gen_site(host)
     assert site, family
-    metas = {s["url"]: s.get("meta") or {} for s in fam.seeds(host, "s")}
+    metas = {s["url"]: s.get("meta") or {} for s in fam.seeds(host, source)}
     total_items = 0
     for pg in site:
         meta = metas.get(pg["url"], {})
@@ -28,7 +40,7 @@ def test_engine_oracle_parity(family):
             [
                 {
                     "url": pg["url"],
-                    "source": "s",
+                    "source": source,
                     "depth": 0,
                     "meta": meta,
                     "html": pg["body"],
@@ -66,9 +78,9 @@ def test_family_contract(family):
     assert params["meta"].default is None
     assert fam.extract_batch.__qualname__ == "batch_extractor.<locals>.extract_batch"
 
-    host = f"{family.replace('_', '-')}.example.jp"
+    source, host = _source_host(family)
     site = fam.gen_site(host)
-    metas = {s["url"]: s.get("meta") or {} for s in fam.seeds(host, "s")}
+    metas = {s["url"]: s.get("meta") or {} for s in fam.seeds(host, source)}
     for pg in site:
         _, links = fam.oracle_parse(pg["url"], pg["body"], metas.get(pg["url"]))
         for l in links:
@@ -76,7 +88,12 @@ def test_family_contract(family):
             assert isinstance(l["meta"], dict)
             metas.setdefault(l["url"], l["meta"])
 
-    row = {"url": site[0]["url"], "source": "s", "depth": 0, "html": site[0]["body"]}
+    row = {
+        "url": site[0]["url"],
+        "source": source,
+        "depth": 0,
+        "html": site[0]["body"],
+    }
     no_meta = fam.extract_batch(pd.DataFrame([row]))
     assert no_meta == fam.extract_batch(pd.DataFrame([{**row, "meta": {}}]))
     assert no_meta == fam.extract_batch(pd.DataFrame([{**row, "meta": None}]))
@@ -84,9 +101,22 @@ def test_family_contract(family):
 
 def test_fixture_determinism():
     for family, fam in FAMILIES.items():
-        a = fam.gen_site("h.example.jp")
-        b = fam.gen_site("h.example.jp")
-        assert a == b, family
+        _, host = _source_host(family)
+        assert fam.gen_site(host) == fam.gen_site(host), family
+
+
+def test_unknown_source_raises():
+    """A spec-driven family never parses an unregistered source or host
+    with some default source's layout: it names what it cannot find."""
+    for family in REGISTERED:
+        fam = FAMILIES[family]
+        url = "https://typo.example.jp/"
+        with pytest.raises(ValueError, match="typo.example.jp"):
+            fam.gen_site("typo.example.jp")
+        with pytest.raises(ValueError, match="'typo'"):
+            fam.parse_page(url, "typo", b"<html></html>", {})
+        with pytest.raises(ValueError, match="typo.example.jp"):
+            fam.oracle_parse(url, b"<html></html>")
 
 
 def test_quirks_present():

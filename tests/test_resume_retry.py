@@ -16,52 +16,13 @@ import pytest
 from goto_eater_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine
 from goto_eater_crawler_spark.sources import webgen
 
-SOURCES = [
-    ("tochigi_like", "list_xpath", "list-a.example.jp", 3.0),
-    ("hokkaido_like", "session_token", "token.example.jp", 4.0),
-]
-BUDGET = 12.0
-
-
-@pytest.fixture(scope="module")
-def small_web():
-    return webgen.build_fixture_web(sources=SOURCES)
+from conftest import BUDGET, crawl_state
 
 
 def _cfg(ckpt, max_rounds=32):
     return CrawlConfig(
         round_budget=BUDGET, max_rounds=max_rounds, checkpoint_dir=ckpt
     )
-
-
-def _state(res):
-    records = sorted(
-        (r["url"], r["item_index"], r["shop_name"], r["address"], r["area_name"])
-        for r in res.records.collect()
-    )
-    seen = {r["canonical_url"] for r in res.seen.collect()}
-    order = [
-        r["canonical_url"]
-        for r in res.fetch_log.filter("status = 'fetched'")
-        .orderBy("fetch_seq")
-        .collect()
-    ]
-    return records, seen, order
-
-
-@pytest.fixture(scope="module")
-def full_run(spark, small_web, tmp_path_factory):
-    """The uninterrupted crawl the resume tests compare against, run
-    once on a parquet store: (round numbers, _state). Every store
-    gives the same crawl, so the Iceberg tests compare with it too."""
-    pages, seeds, robots = small_web
-    full = CrawlEngine(
-        spark,
-        webgen.pages_df(spark, pages),
-        webgen.robots_df(spark, robots),
-        _cfg(str(tmp_path_factory.mktemp("full"))),
-    ).run(seeds)
-    return [m["round"] for m in full.metrics], _state(full)
 
 
 def test_resume_equals_uninterrupted(spark, small_web, full_run, tmp_path_factory):
@@ -91,12 +52,12 @@ def test_resume_equals_uninterrupted(spark, small_web, full_run, tmp_path_factor
         f"{cut_dir}/rounds/round=*/fetch_log"
     )
 
-    class R:  # tiny view object for _state
+    class R:  # tiny view object for crawl_state
         records = all_records
         seen = resumed.seen
         fetch_log = all_log
 
-    got = _state(R)
+    got = crawl_state(R)
     assert got[0] == full_state[0]  # records byte-identical
     assert got[1] == full_state[1]  # seen set identical
     assert got[2] == full_state[2]  # global crawl order identical
@@ -170,7 +131,7 @@ def test_resume_with_round_capacity(spark, small_web, tmp_path_factory):
     # the cap binds: no round fetches more than 3
     assert all(m["fetched"] <= 3 for m in full.metrics)
     assert len(full.metrics) > 2
-    full_state = _state(full)
+    full_state = crawl_state(full)
 
     cut_dir = str(tmp_path_factory.mktemp("cap_cut"))
     partial = CrawlEngine(
@@ -193,7 +154,7 @@ def test_resume_with_round_capacity(spark, small_web, tmp_path_factory):
         seen = resumed.seen
         fetch_log = all_log
 
-    got = _state(R)
+    got = crawl_state(R)
     assert got[0] == full_state[0]
     assert got[1] == full_state[1]
     assert got[2] == full_state[2]
