@@ -16,8 +16,9 @@ round, so the engine uses the north_rule design:
 - bloom verdict "maybe seen" is confirmed against the **exact seen
   table** (canonical_url) with a left-anti join — so false positives
   can never drop a genuinely-new URL: the bloom accelerates, the exact
-  table decides (also for a frozen xor tier's positives, which join
-  the bloom's maybe-set). FP count is surfaced as a lineage counter.
+  table decides. FP count is surfaced as a lineage counter.
+
+These two tiers are the engine's whole URL-seen set.
 
 Sizing at 10^10 keys: bits = 10 bits/key -> 12.5 GB total, e.g.
 n_blocks = 4096 x 3 MB blocks; blocks live in the checkpoint table and
@@ -186,14 +187,8 @@ def split_new_urls(
     blocks: DataFrame,
     exact_seen: DataFrame,
     params: BloomParams,
-    frozen_maybe: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """:func:`confirm_split` with the bloom's maybe-set, ``via``
-    ``bloom_definite`` / ``bloom_fp``. ``frozen_maybe`` (the xor tier's
-    positives after ``CrawlEngine.freeze_seen_snapshot``) joins that
-    maybe-set, so one exact confirm decides for both tiers; after a
-    freeze ``bloom_fp`` counts either tier's false positives."""
+    ``bloom_definite`` / ``bloom_fp``."""
     maybe = bloom_maybe_hashes(candidates, blocks, params)
-    if frozen_maybe is not None:
-        maybe = maybe.unionByName(frozen_maybe)
     return confirm_split(candidates, maybe, exact_seen, "bloom")

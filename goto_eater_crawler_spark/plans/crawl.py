@@ -63,7 +63,6 @@ from ..operators.politeness import (
     robots_split,
     with_crawl_delay,
 )
-from ..operators.xorfilter import build_shard_filters, xor_maybe_hashes
 from ..schema import (
     BLOOM_BLOCK_SCHEMA,
     FEED_EXPORT_FIELDS,
@@ -88,12 +87,6 @@ SEEN_SCHEMA = T.StructType(
 # hosts than this, which keeps resume/metric parity at test scale
 # while the memory stays bounded at any frontier size.
 HOT_HOSTS_CAPACITY = 4096
-# shard count of the immutable xor-filter seen snapshot
-# (freeze_seen_snapshot): at 10^10 keys, shards scale the per-blob
-# size and the build parallelism; the per-shard blobs broadcast to the
-# probe. Written into each manifest; resume refuses a checkpoint
-# whose count differs.
-XOR_SNAPSHOT_SHARDS = 8
 
 
 @dataclass
@@ -141,6 +134,11 @@ class CrawlResult:
     # final bloom blocks — what a continuation (retract + run_rounds)
     # resumes from
     blocks: DataFrame
+
+
+def _bloom_shape(params: BloomParams) -> list[int]:
+    """The bloom shape a manifest records, as its JSON reads back."""
+    return [params.n_blocks, params.m_bits, params.k]
 
 
 def _valid_url() -> F.Column:
@@ -254,11 +252,6 @@ class CrawlEngine:
             if self.cfg.host_ranks is not None
             else None
         )
-        # immutable seen-snapshot tier (set by freeze_seen_snapshot /
-        # reloaded by resume): (shard, data) xor8 blobs + the round
-        # they were committed under
-        self.xor_filters: DataFrame | None = None
-        self._xor_round: int | None = None
         if not isinstance(self.cfg.bloom, BloomParams):
             raise ValueError(
                 f"bloom must be a BloomParams, got {self.cfg.bloom!r}"
@@ -346,8 +339,20 @@ class CrawlEngine:
         frontier = self.store.write(frontier, 0, "frontier")
         seen = self.store.write(seen, 0, "seen_delta")
         blocks = self.store.write(blocks, 0, "blocks")
-        self.store.commit_round(0, {"round": 0, "fetch_seq_offset": 0, "metrics": []})
+        self.store.commit_round(0, self._manifest(0, 0, []))
         return frontier, seen, blocks
+
+    def _manifest(
+        self, round_no: int, fetch_seq_offset: int, metrics: list[dict]
+    ) -> dict:
+        """A round's commit record. ``bloom`` is the shape the blocks
+        table was written with; resume refuses any other."""
+        return {
+            "round": round_no,
+            "fetch_seq_offset": fetch_seq_offset,
+            "metrics": metrics,
+            "bloom": _bloom_shape(self.cfg.bloom),
+        }
 
     def run_rounds(
         self,
@@ -380,26 +385,20 @@ class CrawlEngine:
                 f"nothing committed to resume from in {config.checkpoint_dir}"
             )
         info = eng.store.round_info(committed[-1])
-        # the xor snapshot's blobs are keyed by shard; probing them
-        # with another shard count would read seen URLs as new
-        shards = info.get("xor_snapshot_shards")
-        if shards is not None and shards != XOR_SNAPSHOT_SHARDS:
+        # the stored bitmaps are only valid under the block count, bit
+        # count and k they were built with: probed under others, seen
+        # URLs would read as definitely new and be fetched again. A
+        # manifest without the key is refused too: its shape is unknown.
+        want = _bloom_shape(config.bloom)
+        if info.get("bloom") != want:
             raise ValueError(
-                f"checkpoint xor snapshot has {shards} shards, "
-                f"this engine probes {XOR_SNAPSHOT_SHARDS}"
+                f"checkpoint bloom (n_blocks, m_bits, k) is "
+                f"{info.get('bloom')}, this engine probes {want}"
             )
         last_no = info["round"]
         frontier = eng.store.read(last_no, "frontier", FRONTIER_SCHEMA)
         seen = eng.store.read_many(committed, "seen_delta", SEEN_SCHEMA)
         blocks = eng.store.read(last_no, "blocks", BLOOM_BLOCK_SCHEMA)
-        xr = info.get("xor_snapshot_round")
-        if xr is not None:
-            from ..schema import XOR_SNAPSHOT_SCHEMA
-
-            eng.xor_filters = eng.store.read(
-                xr, "xor_snapshot", XOR_SNAPSHOT_SCHEMA
-            ).localCheckpoint(eager=True)
-            eng._xor_round = xr
         return eng._loop(
             frontier,
             seen,
@@ -408,56 +407,6 @@ class CrawlEngine:
             info["fetch_seq_offset"],
             list(info.get("metrics", [])),
         )
-
-    # -- seen-snapshot freeze (xor arm) ---------------------------------
-
-    def freeze_seen_snapshot(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Freeze the full exact seen set into the IMMUTABLE xor-filter
-        snapshot tier (operators/xorfilter — Graf & Lemire 2020) and
-        reset the mutable bloom blocks to empty, so from here on
-        the mutable arm carries only POST-freeze deltas. This is the
-        compaction product a long-running crawl periodically cuts: the
-        10^10-key historical seen mass served at ~10 bits/key from
-        broadcast-able immutable blobs (exactly 3 loads per probe, no
-        false negatives), while the per-round filter state stays
-        O(new URLs since last freeze).
-
-        Exactness is preserved by construction: the round loop adds the
-        xor probe's positives to the bloom's maybe-set, and the one
-        exact confirm of ``split_new_urls`` decides — so a later
-        ``retract`` needs no snapshot rebuild (the retracted row leaves
-        the exact table; its lingering xor fingerprint degrades into an
-        ordinary false positive that the confirm rescues). After a
-        freeze the ``bloom_fp`` metric counts either tier's false
-        positives.
-
-        Persistent stores get the blobs as a ``xor_snapshot`` table
-        under the last committed round plus manifest metadata, so
-        :meth:`resume` reattaches the tier; every subsequent round's
-        manifest carries the pointer forward.
-
-        Returns ``(blocks', filters)`` — the reset mutable arm and the
-        snapshot blobs; continue with ``run_rounds(frontier, seen,
-        blocks')``.
-        """
-        filters = build_shard_filters(
-            seen.select("url_hash"), n_shards=XOR_SNAPSHOT_SHARDS
-        )
-        new_blocks = build_blocks(seen.select("url_hash").limit(0), self.cfg.bloom)
-        if self.store.persistent:
-            last = self.store.committed_rounds()[-1]
-            filters = self.store.write(filters, last, "xor_snapshot")
-            new_blocks = self.store.write(new_blocks, last, "blocks")
-            info = self.store.round_info(last)
-            info["xor_snapshot_round"] = last
-            info["xor_snapshot_shards"] = XOR_SNAPSHOT_SHARDS
-            self.store.commit_round(last, info)
-            self._xor_round = last
-        else:
-            filters = filters.localCheckpoint(eager=True)
-            new_blocks = new_blocks.localCheckpoint(eager=True)
-        self.xor_filters = filters
-        return new_blocks, filters
 
     # -- frontier retraction ------------------------------------------
 
@@ -475,10 +424,7 @@ class CrawlEngine:
         ``seen`` -> anti-join them out of the exact table -> rebuild
         the bloom blocks from the updated exact table. A bloom bitmap
         cannot delete, and retraction is a rare maintenance operation,
-        so one full rebuild pass replaces a deletable filter. After a
-        freeze the rebuild covers all of ``seen``, not only the
-        post-freeze deltas; that stays exact because the filter only
-        speeds up the check and the exact confirm decides.
+        so one full rebuild pass replaces a deletable filter.
 
         Persistent store: the committed seen deltas are REWRITTEN
         minus the retracted rows (compaction with a filter — the
@@ -666,16 +612,7 @@ class CrawlEngine:
                 .drop("_rn")
                 .select(*FRONTIER_COLS)
             )
-            # the frozen xor tier only adds positives to the bloom's
-            # maybe-set: one exact confirm decides for both tiers
-            frozen_maybe = (
-                xor_maybe_hashes(links_dedup, self.xor_filters, XOR_SNAPSHOT_SHARDS)
-                if self.xor_filters is not None
-                else None
-            )
-            new_rows, _, _ = split_new_urls(
-                links_dedup, blocks, seen, cfg.bloom, frozen_maybe
-            )
+            new_rows, _, _ = split_new_urls(links_dedup, blocks, seen, cfg.bloom)
             # materialize ONCE; this is the round's heavy job — it
             # computes the whole selected->fetch->extract->dedup chain
             # (upstream persists fill here); everything below reads
@@ -836,17 +773,9 @@ class CrawlEngine:
             log_parts.append(round_log)
             done_rounds.append(round_no)
             metrics.append(m)
-            round_info = {
-                "round": round_no,
-                "fetch_seq_offset": fetch_seq_offset,
-                "metrics": metrics,
-            }
-            if self._xor_round is not None:
-                # carry the snapshot pointer forward so resume() from
-                # ANY later round reattaches the tier
-                round_info["xor_snapshot_round"] = self._xor_round
-                round_info["xor_snapshot_shards"] = XOR_SNAPSHOT_SHARDS
-            self.store.commit_round(round_no, round_info)
+            self.store.commit_round(
+                round_no, self._manifest(round_no, fetch_seq_offset, metrics)
+            )
             selected.unpersist()
             extracted.unpersist()
 

@@ -120,12 +120,3 @@ BLOOM_BLOCK_SCHEMA = T.StructType(
         T.StructField("bits", T.BinaryType(), False),
     ]
 )
-
-# immutable xor-filter seen-snapshot tier (operators/xorfilter):
-# one serialized xor8 filter blob per pmod-shard of the frozen seen set
-XOR_SNAPSHOT_SCHEMA = T.StructType(
-    [
-        T.StructField("shard", T.IntegerType(), False),
-        T.StructField("data", T.BinaryType(), False),
-    ]
-)

@@ -422,15 +422,14 @@ def gen_site(host: str, source: str | None = None) -> list[dict]:
     return pages
 
 
-def seeds(host: str, source: str | None = None) -> list[dict]:
+def seeds(host: str, source: str) -> list[dict]:
     spec = spec_for(source, f"https://{host}/")
-    src = source or spec.name
     pag = spec.config.get("pagination", "next")
     if pag == "areas":
         return [
             {
                 "url": list_url(spec, 1, area),
-                "source": src,
+                "source": source,
                 "parse_family": "cards",
                 "depth": 0,
                 "meta": {"area_name": area},
@@ -440,7 +439,7 @@ def seeds(host: str, source: str | None = None) -> list[dict]:
     return [
         {
             "url": list_url(spec, 1),
-            "source": src,
+            "source": source,
             "parse_family": "cards",
             "depth": 0,
             "meta": {},

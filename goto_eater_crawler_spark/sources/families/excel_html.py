@@ -81,7 +81,7 @@ def gen_site(host: str, source: str | None = None, rows_per_area: int = 6) -> li
     return pages
 
 
-def seeds(host: str, source: str = "kagoshima") -> list[dict]:
+def seeds(host: str, source: str) -> list[dict]:
     return [
         {
             "url": index_url(host),

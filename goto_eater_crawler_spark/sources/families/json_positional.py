@@ -63,7 +63,7 @@ def gen_site(host: str, n_rows: int = 40) -> list[dict]:
     ]
 
 
-def seeds(host: str, source: str = "kochi") -> list[dict]:
+def seeds(host: str, source: str) -> list[dict]:
     return [
         {
             "url": endpoint_url(host),

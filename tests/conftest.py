@@ -34,7 +34,7 @@ def spark():
 
 def crawl_state(res):
     """(sorted records, seen set, global crawl order) of a crawl
-    result: the state resume and freeze must leave unchanged."""
+    result: the state resume must leave unchanged."""
     records = sorted(
         (r["url"], r["item_index"], r["shop_name"], r["address"], r["area_name"])
         for r in res.records.collect()
@@ -56,8 +56,8 @@ def small_web():
 
 @pytest.fixture(scope="session")
 def full_run(spark, small_web, tmp_path_factory):
-    """The uninterrupted small-web crawl that resume and freeze tests
-    compare against, run once on a parquet store: (round numbers,
+    """The uninterrupted small-web crawl that the resume tests compare
+    against, run once on a parquet store: (round numbers,
     crawl_state). Every store gives the same crawl, so the Iceberg
     tests compare with it too."""
     pages, seeds, robots = small_web

@@ -14,12 +14,9 @@ import sys
 
 import pytest
 
+from goto_eater_crawler_spark.operators.dedup import BloomParams
 from goto_eater_crawler_spark.operators.fetch import fetch_join
-from goto_eater_crawler_spark.plans.crawl import (
-    XOR_SNAPSHOT_SHARDS,
-    CrawlConfig,
-    CrawlEngine,
-)
+from goto_eater_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine
 from goto_eater_crawler_spark.plans.store import ParquetManifestStore
 from goto_eater_crawler_spark.sources import webgen
 
@@ -58,26 +55,41 @@ def test_fetch_join_rejects_unknown_strategy(spark):
         fetch_join(spark.range(1), spark.range(1), "shuffle")
 
 
-def test_resume_rejects_other_xor_snapshot_shard_count(
-    spark, tiny_web, tmp_path
-):
-    """A checkpoint frozen with another shard count must not be probed
-    with this engine's count: the check fires before any table read,
-    so a hand-written manifest is enough."""
+def _resume_from_manifest(spark, tiny_web, tmp_path, manifest, config):
+    """Resume from a checkpoint holding only a hand-written round-1
+    manifest: no table exists, so the resume must refuse it before it
+    reads one."""
     round_dir = tmp_path / "rounds" / "round=0001"
     round_dir.mkdir(parents=True)
-    (round_dir / "manifest.json").write_text(json.dumps({
-        "round": 1,
-        "fetch_seq_offset": 0,
-        "metrics": [],
-        "xor_snapshot_round": 1,
-        "xor_snapshot_shards": XOR_SNAPSHOT_SHARDS * 2,
-    }))
+    (round_dir / "manifest.json").write_text(json.dumps(
+        {"round": 1, "fetch_seq_offset": 0, "metrics": [], **manifest}
+    ))
     assert ParquetManifestStore(spark, str(tmp_path)).committed_rounds() == [1]
-    with pytest.raises(ValueError, match="shards"):
-        CrawlEngine.resume(
-            spark, *tiny_web, CrawlConfig(checkpoint_dir=str(tmp_path))
-        )
+    with pytest.raises(ValueError, match=r"checkpoint bloom \(n_blocks, m_bits, k\)"):
+        CrawlEngine.resume(spark, *tiny_web, config)
+
+
+def test_resume_rejects_other_bloom_params(spark, tiny_web, tmp_path):
+    """Bitmaps written under one bloom shape, probed under another,
+    read seen URLs as new."""
+    _resume_from_manifest(
+        spark, tiny_web, tmp_path, {"bloom": [32, 1 << 20, 5]},
+        CrawlConfig(
+            checkpoint_dir=str(tmp_path),
+            bloom=BloomParams(n_blocks=16, m_bits=1 << 23, k=5),
+        ),
+    )
+
+
+def test_resume_rejects_other_xor_snapshot_shard_count(spark, tiny_web, tmp_path):
+    """A checkpoint frozen into the deleted xor tier has a reset bloom
+    and records no bloom shape; without its snapshot it would forget
+    every URL seen before the freeze."""
+    _resume_from_manifest(
+        spark, tiny_web, tmp_path,
+        {"xor_snapshot_round": 1, "xor_snapshot_shards": 16},
+        CrawlConfig(checkpoint_dir=str(tmp_path)),
+    )
 
 
 def test_resume_without_checkpoint_dir_raises(spark, tiny_web):

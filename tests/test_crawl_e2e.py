@@ -23,6 +23,10 @@ from goto_eater_crawler_spark.sources.sinks import sorted_feed
 from tests.oracle import crawl_oracle
 
 ROUND_BUDGET = 12.0  # small budget => several rounds, quotas bite
+# Spark jobs the engine_result crawl may start: 214, the most of three
+# measured runs at local[4], plus 5% for the run-to-run drift of an
+# identical crawl's job count
+CRAWL_JOB_CEILING = 224
 
 
 @pytest.fixture(scope="module")
@@ -32,7 +36,8 @@ def fixture_web():
 
 
 @pytest.fixture(scope="module")
-def engine_result(spark, fixture_web):
+def engine_run(spark, fixture_web):
+    """The fixture crawl's result, and the Spark jobs its run started."""
     pages, seeds, robots = fixture_web
     eng = CrawlEngine(
         spark,
@@ -40,7 +45,15 @@ def engine_result(spark, fixture_web):
         webgen.robots_df(spark, robots),
         CrawlConfig(round_budget=ROUND_BUDGET, max_rounds=32),
     )
-    return eng.run(seeds)
+    status = spark.sparkContext.statusTracker()
+    before = set(status.getJobIdsForGroup())
+    res = eng.run(seeds)
+    return res, len(set(status.getJobIdsForGroup()) - before)
+
+
+@pytest.fixture(scope="module")
+def engine_result(engine_run):
+    return engine_run[0]
 
 
 @pytest.fixture(scope="module")
@@ -158,6 +171,13 @@ def test_hot_host_sketch_metrics_match_exact(spark, fixture_web, tmp_path):
 def test_multiple_rounds_happened(engine_result):
     assert len(engine_result.metrics) >= 3
     assert sum(m["fetched"] for m in engine_result.metrics) > 20
+
+
+def test_crawl_job_count_within_ceiling(engine_run):
+    """Per-job fixed cost dominates a fixture round, so the job count
+    may not creep up unnoticed."""
+    _, jobs = engine_run
+    assert jobs <= CRAWL_JOB_CEILING, (jobs, CRAWL_JOB_CEILING)
 
 
 def test_sorted_csv_feed(spark, engine_result, oracle_result):

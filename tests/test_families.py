@@ -68,11 +68,15 @@ def test_engine_oracle_parity(family):
 
 @pytest.mark.parametrize("family", sorted(FAMILIES))
 def test_family_contract(family):
-    """Every family has the same contract: ``oracle_parse(url, body,
-    meta=None)`` with ``{url, parse_family, meta}`` link dicts, and an
+    """Every family has the same contract: ``seeds(host, source)``
+    with no default source, ``oracle_parse(url, body, meta=None)``
+    with ``{url, parse_family, meta}`` link dicts, and an
     ``extract_batch`` from the shared loop that treats a batch without
     a ``meta`` column like one of empty (or null) meta values."""
     fam = FAMILIES[family]
+    seed_params = inspect.signature(fam.seeds).parameters.values()
+    assert [p.name for p in seed_params] == ["host", "source"]
+    assert all(p.default is inspect.Parameter.empty for p in seed_params)
     params = inspect.signature(fam.oracle_parse).parameters
     assert list(params) == ["url", "body", "meta"]
     assert params["meta"].default is None

@@ -13,12 +13,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from goto_eater_crawler_spark.operators.dedup import (
-    BloomParams,
-    build_blocks,
-    split_new_urls,
-    update_blocks,
-)
 from goto_eater_crawler_spark.operators.xorfilter import (
     XorFilter,
     build_shard_filters,
@@ -105,38 +99,3 @@ def test_spark_maybe_superset_of_seen(spark):
     maybe = {r.url_hash for r in xor_maybe_hashes(cand, filters, 4).collect()}
     truly_seen = {r.url_hash for r in seen.collect()}
     assert truly_seen <= maybe, "false negative through the Spark probe path"
-
-
-def test_frozen_maybe_joins_the_bloom_split(spark):
-    """After a freeze the bloom holds only post-freeze keys and the xor
-    tier the pre-freeze ones: with the xor positives passed as
-    ``frozen_maybe``, the one exact confirm gives exactly the anti-join
-    against pre ∪ post seen."""
-
-    def urls(lo, hi):
-        return spark.createDataFrame(
-            [(f"https://h{i}",) for i in range(lo, hi)], "canonical_url string"
-        ).withColumn("url_hash", F.xxhash64("canonical_url"))
-
-    pre, post, cand = urls(0, 150), urls(150, 200), urls(0, 300)
-    params = BloomParams(n_blocks=4, m_bits=1 << 12, k=3)
-    reset = build_blocks(pre.select("url_hash").limit(0), params)
-    blocks = update_blocks(reset, post.select("url_hash"), params)
-    frozen_maybe = xor_maybe_hashes(
-        cand, build_shard_filters(pre.select("url_hash"), n_shards=4), 4
-    )
-    seen = pre.unionByName(post)
-
-    new_rows, definite, fp_new = split_new_urls(
-        cand, blocks, seen, params, frozen_maybe
-    )
-    want = {
-        r.canonical_url
-        for r in cand.join(seen, "canonical_url", "left_anti").collect()
-    }
-    assert {r.canonical_url for r in new_rows.collect()} == want
-    assert definite.count() + fp_new.count() == len(want)
-    assert {r.via for r in new_rows.collect()} <= {"bloom_definite", "bloom_fp"}
-    # the bloom alone no longer knows the pre-freeze keys
-    bloom_only, _, _ = split_new_urls(cand, blocks, seen, params)
-    assert bloom_only.count() > len(want)
