@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import json
 
-from ..registry import REGISTRY, apply_quirks
+from ..registry import apply_quirks, spec_for
 from . import batch_extractor
 
 GENRES = ["和食", "洋食", "中華", "居酒屋", "カフェ"]
@@ -75,13 +75,8 @@ def seeds(host: str, source: str) -> list[dict]:
     ]
 
 
-def _quirks_for(source: str):
-    spec = REGISTRY.get(source)
-    return spec.quirks if spec is not None else REGISTRY["kochi"].quirks
-
-
 def parse_page(url: str, source: str, body: bytes, meta: dict):
-    quirks = _quirks_for(source)
+    quirks = spec_for(source, url).quirks
     items = []
     for row in json.loads(body.decode("utf-8")):
         item = {

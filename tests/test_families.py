@@ -11,9 +11,10 @@ import pytest
 from goto_eater_crawler_spark.sources.families import FAMILIES
 from goto_eater_crawler_spark.sources.registry import REGISTRY
 
-# families whose layout comes from a registry spec crawl a registered
-# (source, host); the rest take any source on a per-family host
-REGISTERED = {"cards": "aichi", "excel_html": "kagoshima"}
+# families whose layout or quirks come from a registry spec crawl a
+# registered (source, host); the rest take any source on a per-family
+# host
+REGISTERED = {"cards": "aichi", "excel_html": "kagoshima", "json_positional": "kochi"}
 
 
 def _source_host(family: str) -> tuple[str, str]:
@@ -112,7 +113,7 @@ def test_fixture_determinism():
 def test_unknown_source_raises():
     """A spec-driven family never parses an unregistered source or host
     with some default source's layout: it names what it cannot find."""
-    for family in REGISTERED:
+    for family in ("cards", "excel_html"):
         fam = FAMILIES[family]
         url = "https://typo.example.jp/"
         with pytest.raises(ValueError, match="typo.example.jp"):
@@ -121,6 +122,14 @@ def test_unknown_source_raises():
             fam.parse_page(url, "typo", b"<html></html>", {})
         with pytest.raises(ValueError, match="typo.example.jp"):
             fam.oracle_parse(url, b"<html></html>")
+    # json_positional takes only its quirks from the spec: its site and
+    # oracle need no source, but its engine parser never falls back to
+    # kochi's quirks
+    site = FAMILIES["json_positional"].gen_site("typo.example.jp")
+    with pytest.raises(ValueError, match="'typo'"):
+        FAMILIES["json_positional"].parse_page(
+            site[0]["url"], "typo", site[0]["body"], {}
+        )
 
 
 def test_quirks_present():
